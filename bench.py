@@ -130,8 +130,8 @@ def run_queries(spark, names, registry, sf_dir, n_runs, timings, failures):
         runs: list[float] = []
         try:
             # one UNTIMED pass first: builds any lazily-materialized scratch
-            # store (minhash signatures, PQ codebooks — mtime-keyed under
-            # /tmp) and absorbs Janino codegen compiles, so the timed runs
+            # store (minhash signatures, PQ codebooks — workloads/scratch.py
+            # stores) and absorbs Janino codegen compiles, so the timed runs
             # measure the steady-state plan. Round-5 lesson: per-query
             # medians drifted +24% purely from which queries happened to
             # pay one-time costs inside their timed window.

@@ -13,6 +13,15 @@ Scale design (100 TB):
 * Hash functions are built from md5 (deterministic, engine-portable),
   not ``F.hash`` (Spark-specific seed), so results are reproducible and
   oracle-checkable.
+
+Invariant (also binds the iterative loops in ``operators/graph.py``): a
+loop's convergence count rides its checkpoint job as a
+``DataFrame.observe`` metric, and ``Observation.get`` blocks, with no
+timeout, until a job over the observed frame finishes. Each
+``.observe(obs, ...)`` must therefore sit directly under an EAGER
+``localCheckpoint``, whose job fires the listener before ``obs.get`` is
+read. Making that checkpoint lazy, or running under Spark Connect, turns
+every such loop into an indefinite hang rather than an error.
 """
 
 from __future__ import annotations

@@ -70,16 +70,6 @@ def train_test_split(
     return df.filter(s == "train"), df.filter(s == "test")
 
 
-def split_sql(id_expr: str, train_fraction: float = 0.8) -> str:
-    """The equivalent ANSI-SQL predicate text (for oracles / other
-    engines): same md5-hex comparison this module's Spark expressions
-    compile to."""
-    return (
-        f"CASE WHEN substr(md5(COALESCE(CAST({id_expr} AS VARCHAR), '')), 1, 8)"
-        f" < '{_threshold_hex(train_fraction)}' THEN 'train' ELSE 'test' END"
-    )
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str,
@@ -113,23 +103,6 @@ def stratified_sample(
     else:
         expr = expr.otherwise(draw < F.lit(_threshold_hex(default_fraction)))
     return df.filter(expr)
-
-
-def stratified_sample_sql(
-    id_expr: str,
-    strata_expr: str,
-    fractions: dict[str, float],
-    default_fraction: float = 0.0,
-) -> str:
-    """The equivalent ANSI-SQL predicate (for oracles / other engines)."""
-    draw = f"substr(md5(COALESCE(CAST({id_expr} AS VARCHAR), '')), 1, 8)"
-    whens = "".join(
-        f" WHEN {strata_expr} = '{value}' THEN {draw} < '{_threshold_hex(frac)}'"
-        for value, frac in sorted(fractions.items())
-    )
-    return (
-        f"CASE{whens} ELSE {draw} < '{_threshold_hex(default_fraction)}' END"
-    )
 
 
 def assign_row_ids(

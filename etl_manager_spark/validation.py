@@ -191,6 +191,11 @@ def profile_approx_quantiles(
     # and skips the probe's eager job — the choice only picks between two
     # value-identical plans, and a wrong "few" hint still fails loudly at
     # execution via the CDF machinery's in-plan assert_true contract.
+    # Only that direction is caught: an OVERSTATED hint (above max_groups
+    # for a column that really has few groups) silently selects the
+    # builtin percentile() fallback below — the same values, but the
+    # single-task per-group distinct-value buffer this harness exists to
+    # avoid, with no execution-time guard.
     n_groups = (
         n_groups_hint
         if n_groups_hint is not None

@@ -408,11 +408,11 @@ def schema_evolution_events_union(spark, sf_dir):
     encode/decode round-trip, and the rows missing props must be exactly
     the even event_ids (the legacy batch)."""
     from etl_manager_spark.sources.evolution import read_parquet_evolved
-    from etl_manager_spark.workloads.pipeline import _layout_scratch
+    from etl_manager_spark.workloads.scratch import scratch_dir
 
     t = load_tables(spark, sf_dir)
     ev = t["events"]
-    base = _layout_scratch("schema_evo_")
+    base = scratch_dir("schema_evo_")
     legacy_path = f"{base}/batch_legacy"
     v2_path = f"{base}/batch_v2"
     # split membership must be TOTAL: pmod handles negative ids (plain %

@@ -12,6 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_manager_spark.workloads import workload
+from etl_manager_spark.workloads.scratch import scratch_dir
 from etl_manager_spark.workloads.tables import load_tables
 
 
@@ -750,17 +751,12 @@ def custom_sink_roundtrip_events(spark, sf_dir):
     matching the direct aggregate exactly (double values survive the
     text round-trip via shortest-round-trip rendering)."""
     import os
-    import shutil
-    import tempfile
 
     from etl_manager_spark.functions.exact import dec_sum
     from etl_manager_spark.sources.pysource import register_sink
 
     register_sink(spark)
-    base = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(tempfile.gettempdir(), f"jsonl_sink_{base}")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("jsonl_sink_")
     (
         load_tables(spark, sf_dir)["events"]
         .filter(F.col("user_id") < 30)
@@ -794,16 +790,10 @@ def xml_roundtrip_events(spark, sf_dir):
     round-trip (Java shortest-round-trip rendering ↔ exact re-parse).
     Extends the §2.B format surface beyond the reference's SerDe set
     (csv/json/parquet/orc/avro/regex) with the remaining classic."""
-    import os
-    import shutil
-    import tempfile
-
     from etl_manager_spark.functions.exact import dec_sum
 
     t = load_tables(spark, sf_dir)
-    base = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(tempfile.gettempdir(), f"xml_roundtrip_{base}")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch_dir("xml_roundtrip_") + "/rows"
     (
         t["events"]
         .filter(F.col("user_id") < 20)
@@ -848,17 +838,12 @@ def streaming_custom_sink_synthlog(spark, sf_dir):
     aggregates; equality with the direct aggregate proves the published
     set is exactly one copy of the stream."""
     import os
-    import shutil
-    import tempfile
 
     from etl_manager_spark.sources.pysource import register, register_stream_sink
 
     register(spark)
     register_stream_sink(spark)
-    base = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(tempfile.gettempdir(), f"jsonl_stream_sink_{base}")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("jsonl_stream_sink_")
     q = (
         spark.readStream.format("synthlog")
         .option("rows", "1000")

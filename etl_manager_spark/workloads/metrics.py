@@ -16,6 +16,7 @@ grows.
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -27,6 +28,7 @@ from etl_manager_spark.operators.topk import rank_bounded
 from etl_manager_spark.workloads import workload
 from etl_manager_spark.workloads.analytics import _BM25_CTES, _BM25_TERMS
 from etl_manager_spark.workloads.pipeline import _MINHASH_PAIRS_CTES
+from etl_manager_spark.workloads.scratch import stored
 from etl_manager_spark.workloads.tables import load_tables, spread
 
 _TOK = r"LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+'), x -> x <> '')"
@@ -52,30 +54,12 @@ def _bm25_joined(spark, sf_dir):
     (pipeline.neardup_pairs_stored): the live score computation is still
     measured by bm25_rank_documents; the eval family — three queries
     over one scored run — reads the stored run, exactly how an
-    evaluation harness consumes a ranker at scale. Store key = fixture
-    mtime + query terms + relevance threshold; superseded stores of the
-    same fixture are swept."""
-    import glob as _glob
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    evaluation harness consumes a ranker at scale. Stored with
+    workloads/scratch.py ``stored``, keyed on the query terms and the
+    relevance threshold."""
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    base = os.path.basename(sf_dir.rstrip("/"))
-    params = hashlib.md5(
-        f"{'|'.join(_BM25_TERMS)}#{_REL_MIN}#v1".encode()
-    ).hexdigest()[:8]
-    tag = f"{base}_{int(os.path.getmtime(src))}_{params}"
-    store = os.path.join(tempfile.gettempdir(), f"bm25_joined_{tag}")
-    for stale in _glob.glob(
-        os.path.join(tempfile.gettempdir(), f"bm25_joined_{base}_*")
-    ):
-        if stale != store:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        t = load_tables(spark, sf_dir)
-        docs = spread(t["documents"], spark)
+    def build(tmp):
+        docs = spread(load_tables(spark, sf_dir)["documents"], spark)
         scores = R.bm25_scores(docs, _BM25_TERMS)
         rel = (
             docs.select(
@@ -86,8 +70,16 @@ def _bm25_joined(spark, sf_dir):
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("rel"))
         )
-        scores.join(rel, on="id").write.mode("overwrite").parquet(store)
-    return spark.read.parquet(store)
+        scores.join(rel, on="id").write.mode("overwrite").parquet(tmp)
+
+    return spark.read.parquet(
+        stored(
+            "bm25_joined",
+            os.path.join(sf_dir, "documents.parquet"),
+            f"{'|'.join(_BM25_TERMS)}#{_REL_MIN}#v1",
+            build,
+        )
+    )
 
 
 @workload(
@@ -860,11 +852,13 @@ def theil_sen_daily_value_trend(spark, sf_dir):
 
     daily = _daily_mean(spark, sf_dir)
     mn = daily.groupBy().agg(F.min("day").alias("d0"))
-    # no checkpoint (round 11): idx is |days| rows derived from the
-    # already-checkpointed daily table by a broadcast join — the two
-    # self-join branches re-derive it from the checkpoint for free
-    # (days-bounded, zero fact scans), and the former eager checkpoint
-    # here was a full barrier wave per invocation
+    # no checkpoint (round 11): idx is |days| rows, but ``daily`` is a
+    # LAZY aggregate over the events scan — nothing upstream is
+    # checkpointed. The mn branch and both self-join branches plan the
+    # same scan+aggregate subtree, and its single execution rests on
+    # Spark's ReuseExchange over those identical subtrees (correct either
+    # way: the quantized aggregate is deterministic). The former eager
+    # checkpoint here was a full barrier wave per invocation
     idx = daily.crossJoin(F.broadcast(mn)).select(
         F.datediff(F.col("day"), F.col("d0")).cast("long").alias("i"),
         "mv_q",

@@ -20,6 +20,7 @@ from etl_manager_spark.operators import text as X
 from etl_manager_spark.operators.asof import asof_join
 from etl_manager_spark.functions.exact import lit_double_array, lit_double_matrix
 from etl_manager_spark.workloads import ann_oracle, workload
+from etl_manager_spark.workloads.scratch import scratch_dir, stored
 from etl_manager_spark.workloads.tables import load_tables, spread
 
 _TOK_SQL = r"LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(TRIM(text), '\s+'), x -> x <> '')"
@@ -346,36 +347,27 @@ def neardup_pairs_stored(spark, sf_dir):
     re-execute the whole shingle→minhash→band→verify chain. The
     ``minhash_near_dup_pairs`` workload still measures live generation.
 
-    Store key = fixture identity (basename + mtime) + signature
-    parameters + algorithm version, so testdata regeneration or a
-    signature-code change invalidates it; superseded stores of the SAME
-    fixture are swept, other scale factors' stores survive (same policy
-    as the incremental signature store below)."""
-    import glob
-    import shutil
-    import tempfile
+    Stored with workloads/scratch.py ``stored``: the key carries the
+    signature parameters and algorithm version, so testdata regeneration
+    or a signature-code change rebuilds it."""
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    base = os.path.basename(sf_dir.rstrip("/"))
-    tag = (
-        f"{base}_{int(os.path.getmtime(src))}"
-        f"_h8b2j50_v{D.SIGNATURE_ALGO_VERSION}"
-    )
-    store = os.path.join(tempfile.gettempdir(), f"neardup_pairs_{tag}")
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"neardup_pairs_{base}_*")
-    ):
-        if stale != store:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        t = load_tables(spark, sf_dir)
+    def build(tmp):
+        docs = load_tables(spark, sf_dir)["documents"]
         D.minhash_near_duplicates(
-            t["documents"].filter(F.col("doc_id") < 200),
+            docs.filter(F.col("doc_id") < 200),
             num_hashes=8,
             bands=2,
             jaccard_threshold=0.5,
-        ).write.mode("overwrite").parquet(store)
-    return spark.read.parquet(store)
+        ).write.mode("overwrite").parquet(tmp)
+
+    return spark.read.parquet(
+        stored(
+            "neardup_pairs",
+            os.path.join(sf_dir, "documents.parquet"),
+            f"h8b2j50_v{D.SIGNATURE_ALGO_VERSION}",
+            build,
+        )
+    )
 
 
 # Shared CTE chain: minhash-LSH candidate pairs over doc_id<200, verified
@@ -1492,7 +1484,7 @@ def federated_join_formats(spark, sf_dir):
     from etl_manager_spark.meta.table import TableMeta
 
     t = load_tables(spark, sf_dir)
-    scratch = _layout_scratch("federated_formats_")
+    scratch = scratch_dir("federated_formats_")
     cust_meta = TableMeta(
         name="customer_csv",
         location="customer_csv",
@@ -1615,7 +1607,7 @@ def run_job_etl_output(spark, sf_dir):
     preserved values."""
     from etl_manager_spark.jobs.runner import SparkJob
 
-    scratch = _layout_scratch("run_job_wl_")
+    scratch = scratch_dir("run_job_wl_")
     folder = os.path.join(scratch, "etl_job")
     os.makedirs(os.path.join(folder, "py_resources"))
     with open(os.path.join(folder, "job.py"), "w") as fh:
@@ -1661,7 +1653,7 @@ def catalog_sql_partitioned_events(spark, sf_dir):
     from etl_manager_spark.meta.table import TableMeta
 
     t = load_tables(spark, sf_dir)
-    scratch = _layout_scratch("catalog_sql_")
+    scratch = scratch_dir("catalog_sql_")
     table = TableMeta(
         name="events_part",
         location="events_part",
@@ -1731,7 +1723,7 @@ def regex_scan_event_log(spark, sf_dir):
     from etl_manager_spark.meta.table import TableMeta
 
     t = load_tables(spark, sf_dir)
-    scratch = _layout_scratch("regex_scan_")
+    scratch = scratch_dir("regex_scan_")
     log_path = os.path.join(scratch, "events_log")
     (
         t["events"]
@@ -2061,45 +2053,6 @@ def mixture_sample_token_budget(spark, sf_dir):
 # Data layout: compaction + range-clustered writes (operators/layout.py)
 
 
-
-_LAYOUT_SESSION: str | None = None
-_LAYOUT_ORPHAN_SECONDS = 3600.0
-
-
-def _layout_scratch(prefix: str) -> str:
-    """Fresh scratch dir for a layout workload, sweeping stale dirs of the
-    same prefix first (the returned DataFrame reads lazily from the new
-    dir, so cleanup can only happen on the NEXT invocation — without the
-    sweep, repeated bench runs accumulate temp tables).
-
-    The sweep is SCOPED (same hazard the minhash signature store fixed):
-    it removes only (a) THIS session's previous dirs — the session token
-    is embedded in the dir name — and (b) any-session dirs older than
-    ``_LAYOUT_ORPHAN_SECONDS`` (orphans of crashed runs). A concurrent
-    session's fresh dir (pytest and bench interleaving) is never
-    evicted mid-read."""
-    import glob
-    import shutil
-    import tempfile
-    import time
-    import uuid
-
-    global _LAYOUT_SESSION
-    if _LAYOUT_SESSION is None:
-        _LAYOUT_SESSION = uuid.uuid4().hex[:8]
-    now = time.time()
-    mine = f"{prefix}s{_LAYOUT_SESSION}_"
-    for stale in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")):
-        try:
-            own = os.path.basename(stale).startswith(mine)
-            orphaned = now - os.path.getmtime(stale) > _LAYOUT_ORPHAN_SECONDS
-        except OSError:
-            continue
-        if own or orphaned:
-            shutil.rmtree(stale, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=mine)
-
-
 @workload(
     "layout_compact_events",
     """
@@ -2125,7 +2078,7 @@ def layout_compact_events(spark, sf_dir):
     from etl_manager_spark.operators.layout import compact
 
     t = load_tables(spark, sf_dir)
-    path = _layout_scratch("layout_compact_") + "/events"
+    path = scratch_dir("layout_compact_") + "/events"
     t["events"].repartition(32).write.mode("overwrite").parquet(path)
     stats = compact(spark, path, target_files=4)
     reread = spark.read.parquet(path)
@@ -2160,7 +2113,7 @@ def layout_sorted_write_orders(spark, sf_dir):
     from etl_manager_spark.operators.layout import sorted_partitioned_write
 
     t = load_tables(spark, sf_dir)
-    path = _layout_scratch("layout_sorted_") + "/orders"
+    path = scratch_dir("layout_sorted_") + "/orders"
     sorted_partitioned_write(
         t["orders"], path, range_cols=["o_orderdate"], n_partitions=8
     )
@@ -2452,7 +2405,7 @@ def layout_zorder_write_events(spark, sf_dir):
     from etl_manager_spark.operators.layout import zorder_write
 
     t = load_tables(spark, sf_dir)
-    path = _layout_scratch("layout_zorder_") + "/events"
+    path = scratch_dir("layout_zorder_") + "/events"
     zorder_write(
         t["events"].select("event_id", "user_id", "value"),
         path,
@@ -2626,44 +2579,26 @@ def incremental_minhash_dedup_documents(spark, sf_dir):
     replays the same banding and verification in SQL.
 
     Exercises the STORED-signature path the operator advertises: corpus
-    signatures are materialized once to a scratch parquet (keyed to the
-    fixture's mtime so testdata regen invalidates it — a stand-in for the
-    signature table a production corpus maintains at ingest) and the
-    per-batch query reads them back instead of recomputing, so measured
-    cost is O(batch + candidates), independent of corpus size."""
-    import glob
-    import shutil
-    import tempfile
-
+    signatures are materialized once to a scratch parquet (a
+    workloads/scratch.py ``stored`` store, so testdata regen invalidates
+    it — a stand-in for the signature table a production corpus maintains
+    at ingest) and the per-batch query reads them back instead of
+    recomputing, so measured cost is O(batch + candidates), independent
+    of corpus size."""
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
     new_batch = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
-
-    # Store key = fixture identity (basename + mtime) + signature
-    # parameters + algorithm version, so a store can never be reused
-    # across testdata regenerations or signature-code changes. Stale
-    # stores with other tags are swept (same policy as _layout_scratch).
-    src = os.path.join(sf_dir, "documents.parquet")
-    base = os.path.basename(sf_dir.rstrip("/"))
-    tag = f"{base}_{int(os.path.getmtime(src))}_h8_v{D.SIGNATURE_ALGO_VERSION}"
-    store = os.path.join(tempfile.gettempdir(), f"minhash_sig_store_{tag}")
-    # Sweep only SUPERSEDED stores of this same fixture (same sf-dir
-    # basename, older mtime/version tag): stores for other scale factors
-    # must survive — tests at sf0.001 and bench at sf0.1 alternate within
-    # one host, and a cross-fixture sweep would evict each other's cache
-    # every run (and could delete a store another live session is lazily
-    # reading mid-query).
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"minhash_sig_store_{base}_*")
-    ):
-        if stale != store:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        D.minhash_signatures(corpus, num_hashes=8).write.mode(
-            "overwrite"
-        ).parquet(store)
-    corpus_sigs = spark.read.parquet(store)
+    corpus_sigs = spark.read.parquet(
+        stored(
+            "minhash_sig_store",
+            os.path.join(sf_dir, "documents.parquet"),
+            f"h8_v{D.SIGNATURE_ALGO_VERSION}",
+            lambda tmp: D.minhash_signatures(corpus, num_hashes=8)
+            .write.mode("overwrite")
+            .parquet(tmp),
+        )
+    )
     return D.incremental_minhash_dedup(
         new_batch, corpus, corpus_sigs=corpus_sigs, jaccard_threshold=0.5
     )
@@ -2735,6 +2670,7 @@ def similarity_topk_pq_adc(spark, sf_dir):
     query_id. Oracle: ann_oracle.pq_adc_oracle replays codes, LUT sums,
     shortlist, rerank, and recall from the same shared-trainer
     literals."""
+    import json
     from functools import reduce
     from operator import add
 
@@ -2742,40 +2678,15 @@ def similarity_topk_pq_adc(spark, sf_dir):
 
     from etl_manager_spark.operators.ranking import quantize
 
-    import glob
-    import json
-    import shutil
-    import tempfile
-
     t = load_tables(spark, sf_dir)
     emb = _emb_set(t["embeddings"])
     # The (codebooks, codes) pair is the PQ INDEX — in production it is
     # built once at ingest and every search reads it; retraining and
     # re-encoding the corpus per query would be wrong at any scale. Same
-    # stored-artifact pattern (and same keying/sweep policy) as the
-    # minhash signature store above: fixture basename + mtime + ADC
-    # params + algorithm version, so regen or code changes rebuild.
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    base = os.path.basename(sf_dir.rstrip("/"))
-    tag = (
-        f"{base}_{int(os.path.getmtime(src))}"
-        f"_m{ann_oracle.ADC_SUBSPACES}x{ann_oracle.ADC_CENTROIDS}"
-        f"_v{S.PQ_ALGO_VERSION}"
-    )
-    store = os.path.join(tempfile.gettempdir(), f"pq_index_store_{tag}")
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"pq_index_store_{base}_*")
-    ):
-        if stale != store:
-            shutil.rmtree(stale, ignore_errors=True)
-    books_path = os.path.join(store, "books.json")
-    codes_path = os.path.join(store, "codes")
-    if os.path.exists(books_path) and os.path.exists(
-        os.path.join(codes_path, "_SUCCESS")
-    ):
-        with open(books_path) as f:
-            books = json.load(f)
-    else:
+    # workloads/scratch.py ``stored`` policy as the minhash signature
+    # store above, keyed on the ADC params and algorithm version.
+
+    def build(tmp):
         books = S.pq_train_codebooks(
             emb,
             num_subspaces=ann_oracle.ADC_SUBSPACES,
@@ -2788,15 +2699,22 @@ def similarity_topk_pq_adc(spark, sf_dir):
         # (measured 8 s single-task vs <1 s spread at sf0.1)
         S.pq_encode(spread(emb, spark), books).write.mode(
             "overwrite"
-        ).parquet(codes_path)
-        # books.json written LAST = the store's commit marker (json float
-        # repr round-trips doubles exactly, so a reload trains nothing
-        # and changes nothing)
-        tmp = books_path + ".tmp"
-        with open(tmp, "w") as f:
+        ).parquet(os.path.join(tmp, "codes"))
+        # json float repr round-trips doubles exactly, so a reload trains
+        # nothing and changes nothing
+        with open(os.path.join(tmp, "books.json"), "w") as f:
             json.dump(books, f)
-        os.replace(tmp, books_path)
-    codes = spark.read.parquet(codes_path)
+
+    store = stored(
+        "pq_index_store",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        f"m{ann_oracle.ADC_SUBSPACES}x{ann_oracle.ADC_CENTROIDS}"
+        f"_v{S.PQ_ALGO_VERSION}",
+        build,
+    )
+    with open(os.path.join(store, "books.json")) as f:
+        books = json.load(f)
+    codes = spark.read.parquet(os.path.join(store, "codes"))
     # duplicate query ids collapse to their lexicographically-least
     # vector (same rule in ann_oracle.pq_adc_oracle): the rerank lookup
     # is a MAP keyed by query_id, and a duplicated key is a crash
@@ -3150,51 +3068,38 @@ def incremental_rollup_events(spark, sf_dir):
     independent of history length. The merge is exact because both
     partial states are associative (counts are integers, sums are
     DECIMAL — the functions/exact.py discipline), so the result is
-    bitwise-identical to the full recompute the oracle runs. Same
-    mtime+version-keyed scratch-store pattern as the minhash signature
-    and PQ index stores (ingest-time artifact, not query-time work)."""
-    import glob
-    import shutil
-    import tempfile
-
+    bitwise-identical to the full recompute the oracle runs. The partials
+    are a workloads/scratch.py ``stored`` store, like the minhash
+    signature and PQ index stores (ingest-time artifact, not query-time
+    work)."""
     t = load_tables(spark, sf_dir)
     events = t["events"]
     max_day = events.agg(
         F.date_trunc("day", F.max("ts")).alias("d")
     ).first()["d"]
-    src = os.path.join(sf_dir, "events.parquet")
-    base = os.path.basename(sf_dir.rstrip("/"))
-    tag = f"{base}_{int(os.path.getmtime(src))}_v1"
-    store = os.path.join(
-        tempfile.gettempdir(), f"rollup_partials_store_{tag}"
-    )
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"rollup_partials_store_{base}_*")
-    ):
-        if stale != store:
-            shutil.rmtree(stale, ignore_errors=True)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        (
-            events.filter(F.date_trunc("day", "ts") < F.lit(max_day))
-            .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
+    day = F.date_trunc("day", "ts")
+
+    def partials(days):
+        return (
+            events.filter(days)
+            .groupBy("event_type", day.alias("day"))
             .agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.col("value").cast("decimal(18,2)")).alias("tot"),
             )
-            .write.mode("overwrite")
-            .parquet(store)
         )
-    partials = spark.read.parquet(store)
-    fresh = (
-        events.filter(F.date_trunc("day", "ts") >= F.lit(max_day))
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("tot"),
-        )
+
+    closed = stored(
+        "rollup_partials_store",
+        os.path.join(sf_dir, "events.parquet"),
+        "v1",
+        lambda tmp: partials(day < F.lit(max_day))
+        .write.mode("overwrite")
+        .parquet(tmp),
     )
     return (
-        partials.unionByName(fresh)
+        spark.read.parquet(closed)
+        .unionByName(partials(day >= F.lit(max_day)))
         .groupBy("event_type")
         .agg(
             F.sum("n").alias("n_events"),
@@ -3516,7 +3421,7 @@ def fixedwidth_scan_orders(spark, sf_dir):
     from etl_manager_spark.meta.table import TableMeta
 
     t = load_tables(spark, sf_dir)
-    scratch = _layout_scratch("fixedwidth_scan_")
+    scratch = scratch_dir("fixedwidth_scan_")
     path = os.path.join(scratch, "orders_fw")
     (
         t["orders"]

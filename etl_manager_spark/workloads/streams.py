@@ -15,6 +15,7 @@ from etl_manager_spark.streaming.windows import (
     sliding_rollup,
 )
 from etl_manager_spark.workloads import workload
+from etl_manager_spark.workloads.scratch import scratch_dir
 
 
 # Mirror of the reader-enforced pre-epoch contract (streaming/windows.py
@@ -361,27 +362,11 @@ def streaming_cdc_upsert_latest_event(spark, sf_dir):
     keyed by user_id; each micro-batch collapses to last-writer-wins
     (ts, event_id desc) and MERGEs into a versioned parquet state table
     behind an atomic swap. The returned final state must equal the batch
-    answer — latest event per user — which is the oracle."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    # sweep previous runs' state (the result reads lazily from the new
-    # dir, so cleanup can only happen on the next invocation). Scoped to
-    # THIS process's scratch dirs: a bare /tmp/cdc_upsert_* glob deleted
-    # state owned by a concurrently-running session (bench + pytest on
-    # one box) out from under its in-flight query.
-    prefix = f"cdc_upsert_p{os.getpid()}_"
-    for stale in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*")):
-        shutil.rmtree(stale, ignore_errors=True)
-
+    answer — latest event per user — which is the oracle. The state lives
+    in a workloads/scratch.py ``scratch_dir``."""
     from etl_manager_spark.streaming.enrich import apply_cdc_stream
-    from etl_manager_spark.streaming.windows import read_events_stream
 
-    from pyspark.sql import functions as F
-
-    scratch = tempfile.mkdtemp(prefix=prefix)
+    scratch = scratch_dir("cdc_upsert_")
     changes = read_events_stream(spark, sf_dir).select(
         "user_id", "event_id", "ts", "event_type"
     )

@@ -467,37 +467,6 @@ def test_compact_requires_exactly_one_target(spark, tmp_path):
         compact(spark, path, target_files=1, target_file_bytes=100)
 
 
-def test_layout_scratch_sweep_is_session_scoped(tmp_path, monkeypatch):
-    """Two interleaved sessions must not evict each other's live scratch
-    dirs (round-6 ask: same concurrent-session hazard the minhash
-    signature store fixed). Only THIS session's previous dirs and
-    age-expired orphans are swept."""
-    import os
-    import tempfile
-    import time
-
-    from etl_manager_spark.workloads import pipeline as P
-
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    monkeypatch.setattr(P, "_LAYOUT_SESSION", None)
-
-    foreign = tmp_path / "layout_t_sOTHER123_live"  # concurrent session, fresh
-    foreign.mkdir()
-    orphan = tmp_path / "layout_t_sDEAD0000_old"  # crashed session, ancient
-    orphan.mkdir()
-    old = time.time() - 2 * P._LAYOUT_ORPHAN_SECONDS
-    os.utime(orphan, (old, old))
-
-    d1 = P._layout_scratch("layout_t_")
-    assert foreign.exists(), "fresh foreign-session dir must survive"
-    assert not orphan.exists(), "age-expired orphan must be reclaimed"
-
-    d2 = P._layout_scratch("layout_t_")
-    assert not os.path.exists(d1), "own previous dir must be swept"
-    assert os.path.exists(d2)
-    assert foreign.exists(), "foreign dir survives repeated sweeps"
-
-
 def test_temperature_resample_null_stratum_is_sampled(spark):
     """A NULL stratum is a real stratum: it was counted into the quota
     denominator, so an equi-join dropping its rows under-filled the
