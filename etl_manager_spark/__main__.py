@@ -10,8 +10,9 @@ Usage::
         [--sf-dir /root/testdata/sf0.01]
 
 ``verify`` runs the Spark query AND its DuckDB oracle side-by-side on the
-same parquet dir and compares row sets (column-name-sorted, like the
-driver's gate). Exit code 1 on mismatch.
+same parquet dir and compares them with ``tools/parity_lib.compare_results``,
+the comparison the oracle-parity tests use (result types, column names,
+row counts, values). It needs a source checkout. Exit code 1 on mismatch.
 """
 
 from __future__ import annotations
@@ -38,12 +39,6 @@ def _session(cpus: str = "8"):
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-
-
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
 
 
 def cmd_list(args) -> int:
@@ -94,6 +89,9 @@ def cmd_oracle(args) -> int:
 def cmd_verify(args) -> int:
     import duckdb
 
+    from etl_manager_spark.workloads.tables import TABLE_NAMES
+    from tools.parity_lib import compare_results
+
     reg = _registry()
     w = reg.get(args.query)
     if w is None:
@@ -107,28 +105,25 @@ def cmd_verify(args) -> int:
         print(f"OK rows={n} (no oracle compare)")
         return 0
     spark = _session(args.cpus)
-    sdf = w.fn(spark, args.sf_dir).toPandas().sort_index(axis=1)
+    sdf = w.fn(spark, args.sf_dir)
+    rows = [tuple(r) for r in sdf.collect()]
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{args.sf_dir}/{t}.parquet')"
         )
-    odf = con.sql(w.oracle).df().sort_index(axis=1)
-    s = sorted(map(tuple, sdf.itertuples(index=False)))
-    o = sorted(map(tuple, odf.itertuples(index=False)))
-    if list(sdf.columns) != list(odf.columns):
-        print(f"MISMATCH columns: spark={list(sdf.columns)} "
-              f"oracle={list(odf.columns)}")
+    rel = con.sql(w.oracle)
+    problems = compare_results(
+        args.query, sdf.columns, rows, sdf.dtypes,
+        rel.columns, rel.fetchall(), rel.types,
+    )
+    if problems:
+        print(f"MISMATCH {args.query}:")
+        for p in problems:
+            print(f"  {p}")
         return 1
-    if s != o:
-        print(f"MISMATCH values: {len(s)} spark rows vs {len(o)} oracle rows")
-        for i, (a, b) in enumerate(zip(s, o)):
-            if a != b:
-                print(f"first diff at sorted row {i}:\n  spark : {a}\n  oracle: {b}")
-                break
-        return 1
-    print(f"OK {args.query}: {len(s)} rows match the DuckDB oracle")
+    print(f"OK {args.query}: {len(rows)} rows match the DuckDB oracle")
     return 0
 
 

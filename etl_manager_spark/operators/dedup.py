@@ -13,22 +13,14 @@ Scale design (100 TB):
 * Hash functions are built from md5 (deterministic, engine-portable),
   not ``F.hash`` (Spark-specific seed), so results are reproducible and
   oracle-checkable.
-
-Invariant (also binds the iterative loops in ``operators/graph.py``): a
-loop's convergence count rides its checkpoint job as a
-``DataFrame.observe`` metric, and ``Observation.get`` blocks, with no
-timeout, until a job over the observed frame finishes. Each
-``.observe(obs, ...)`` must therefore sit directly under an EAGER
-``localCheckpoint``, whose job fires the listener before ``obs.get`` is
-read. Making that checkpoint lazy, or running under Spark Connect, turns
-every such loop into an indefinite hang rather than an error.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_manager_spark.operators.graph import checkpoint_observed
 from etl_manager_spark.operators.text import tokens
 
 # NULL-text convention, shared by every signature family here: a document
@@ -229,20 +221,18 @@ def connected_components_star(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # canonical orientation u > v, self-loops dropped. Round 11: edge
-    # counts ride the checkpoint job as an observed metric — the former
-    # separate .count() was one-to-two extra jobs PER ROUND (the
-    # checkpointed scan is cheap, but each count is a full job barrier).
-    obs0 = Observation()
-    edges = (
+    # canonical orientation u > v, self-loops dropped. Edge counts ride
+    # the checkpoint job — a separate .count() would be one-to-two extra
+    # jobs PER ROUND (the checkpointed scan is cheap, but each count is a
+    # full job barrier).
+    edges, n_edges = checkpoint_observed(
         pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
             F.least(F.col(id_a), F.col(id_b)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        F.count(F.lit(1)),
     )
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -285,20 +275,13 @@ def connected_components_star(
         return from_u.union(from_v).distinct()
 
     converged = False
-    n_edges = int(obs0.get["n"])
     for _ in range(max_iterations):
-        obs = Observation()
-        new_edges = (
-            small_star(large_star(edges))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        new_edges, n_new = checkpoint_observed(
+            small_star(large_star(edges)), F.count(F.lit(1))
         )
         # set-equality in ONE subtraction job, not two: both sides are
         # duplicate-free (distinct), so equal counts + empty A∖B imply
-        # equality; the counts ride the checkpoint jobs as observed
-        # metrics (zero extra jobs — obs.get returns after the eager
-        # checkpoint has materialized)
-        n_new = int(obs.get["n"])
+        # equality; the counts ride the checkpoint jobs (zero extra jobs)
         changed = (
             1
             if n_new != n_edges
@@ -388,11 +371,9 @@ def near_dup_clusters(
         )
         # Carry the previous label through the SAME aggregation (old_label is
         # non-NULL exactly once per id), and ride the changed-row count on
-        # the checkpoint job as an observed metric (round 11) — the former
-        # limit(1).count() over the checkpointed result was still a full
-        # extra job barrier per round.
-        obs = Observation()
-        agged = (
+        # the checkpoint job — a limit(1).count() over the checkpointed
+        # result would be a full extra job barrier per round.
+        agged, changed = checkpoint_observed(
             neighbor_labels.unionByName(
                 labels.withColumn("old_label", F.col("cluster_id"))
             )
@@ -400,16 +381,9 @@ def near_dup_clusters(
             .agg(
                 F.min("cluster_id").alias("cluster_id"),
                 F.max("old_label").alias("old_label"),
-            )
-            .observe(
-                obs,
-                F.count(
-                    F.when(F.col("cluster_id") != F.col("old_label"), 1)
-                ).alias("chg"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            F.count(F.when(F.col("cluster_id") != F.col("old_label"), 1)),
         )
-        changed = int(obs.get["chg"])
         labels = agged.select("id", "cluster_id")
         if changed == 0:
             converged = True

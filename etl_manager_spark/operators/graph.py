@@ -17,8 +17,27 @@ quantization rule.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def checkpoint_observed(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it together with the
+    integer aggregate ``metric`` over its rows (e.g. ``F.count(F.lit(1))``),
+    computed by the checkpoint's own job via ``DataFrame.observe``: an
+    iterative loop's convergence count costs no job of its own.
+
+    Invariant: ``Observation.get`` blocks, with no timeout, until a job
+    over the observed frame finishes. The checkpoint here is eager, so
+    its job has fired the listener before ``get`` is read. Making it
+    lazy, or running under Spark Connect, would turn every caller's loop
+    (connected components and label propagation in operators/dedup.py,
+    BFS and k-core peeling here) into an indefinite hang rather than an
+    error — keep the observe and the eager checkpoint together, here.
+    """
+    obs = Observation()
+    out = df.observe(obs, metric.alias("v")).localCheckpoint(eager=True)
+    return out, int(obs.get["v"])
 
 
 def triangle_counts(
@@ -235,20 +254,17 @@ def bfs_distances(
     )
     frontier = visited
     for depth in range(1, max_depth + 1):
-        # round 11: the frontier-emptiness probe rides the checkpoint job
-        # as an observed metric — the former limit(1).count() was an
-        # extra job barrier per BFS layer
-        obs = Observation()
-        nxt = (
+        # the frontier-emptiness probe rides the checkpoint job — a
+        # limit(1).count() would be an extra job barrier per BFS layer
+        nxt, n_next = checkpoint_observed(
             frontier.join(sym, frontier["id"] == sym["src"])
             .select(F.col("dst").alias("id"))
             .distinct()
             .join(visited, on="id", how="anti")
-            .select("id", F.lit(depth).cast("int").alias("dist"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("id", F.lit(depth).cast("int").alias("dist")),
+            F.count(F.lit(1)),
         )
-        if int(obs.get["n"]) == 0:
+        if n_next == 0:
             break
         visited = visited.unionAll(nxt).localCheckpoint(eager=True)
         frontier = nxt
@@ -287,16 +303,12 @@ def kcore_subgraph(
 
     Returns the surviving canonical edge list (id_a < id_b).
     """
-    # round 11: edge counts ride the checkpoint jobs as observed metrics
-    # instead of a separate .count() job per peeling round
-    obs0 = Observation()
-    e = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    # edge counts ride the checkpoint jobs instead of a separate
+    # .count() job per peeling round
+    e, n_edges = checkpoint_observed(
+        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct(),
+        F.count(F.lit(1)),
     )
-    n_edges = int(obs0.get["n"])
     for _ in range(max_rounds):
         sym = e.select(F.col("a").alias("node")).unionAll(
             e.select(F.col("b").alias("node"))
@@ -307,15 +319,12 @@ def kcore_subgraph(
             .filter(F.col("deg") >= k)
             .select("node")
         )
-        obs = Observation()
-        e2 = (
+        e2, n2 = checkpoint_observed(
             e.join(keep.withColumnRenamed("node", "a"), on="a", how="semi")
             .join(keep.withColumnRenamed("node", "b"), on="b", how="semi")
-            .select("a", "b")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("a", "b"),
+            F.count(F.lit(1)),
         )
-        n2 = int(obs.get["n"])
         if n2 == n_edges:
             return e2.select(F.col("a").alias(id_a), F.col("b").alias(id_b))
         e, n_edges = e2, n2

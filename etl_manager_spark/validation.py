@@ -75,10 +75,10 @@ def validate(df: "DataFrame", table: "TableMeta") -> ConstraintReport:
                 ).alias(f"{name}.pattern")
             )
 
-    report = ConstraintReport(table=table.name, row_count=df.count())
-    if aggs:
-        row = df.agg(*aggs).collect()[0]
-        report.violations.update({k: int(v or 0) for k, v in row.asDict().items()})
+    # the row count rides the constraint aggregate: one scan, one job
+    row = df.agg(F.count(F.lit(1)).alias("rows"), *aggs).collect()[0].asDict()
+    report = ConstraintReport(table=table.name, row_count=row.pop("rows"))
+    report.violations.update({k: int(v or 0) for k, v in row.items()})
 
     if table.primary_key:
         dupes = (

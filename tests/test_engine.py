@@ -112,6 +112,31 @@ def test_cli_verify_reports_mismatch(monkeypatch, capsys):
     assert "MISMATCH" in capsys.readouterr().out
 
 
+def test_cli_verify_rejects_double_for_bigint(monkeypatch, capsys):
+    # equal values, wrong type: an oracle column typed DOUBLE where Spark
+    # emits bigint fails the gate's comparison, so verify must fail too
+    from etl_manager_spark import workloads
+    from etl_manager_spark.__main__ import main
+
+    reg = workloads.load_registry()
+    real = reg["l_diversity_audit_events"]
+    import dataclasses
+
+    bad = dataclasses.replace(
+        real,
+        oracle_spec=(
+            f"SELECT * REPLACE (CAST(n AS DOUBLE) AS n) FROM ({real.oracle})"
+        ),
+    )
+    import etl_manager_spark.__main__ as cli
+
+    monkeypatch.setattr(
+        cli, "_registry", lambda: {**reg, "l_diversity_audit_events": bad}
+    )
+    assert main(["verify", "l_diversity_audit_events"]) == 1
+    assert "DOUBLE" in capsys.readouterr().out
+
+
 def test_update_database_ignores_temp_views(spark, tmp_path):
     """A session temp view sharing a table's name must not make
     update_database skip creating the real catalog table."""

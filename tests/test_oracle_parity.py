@@ -90,7 +90,7 @@ def test_type_gate_catches_uncast_sum(duck):
 
 def test_catalog_type_scan_catches_injection(duck):
     """tools.lint_catalog.scan_oracle_types flags a registry entry whose
-    oracle emits HUGEINT."""
+    oracle emits HUGEINT or BIT — the parity gate's FORBIDDEN_TOKENS."""
     from types import SimpleNamespace
 
     from tools.lint_catalog import scan_oracle_types
@@ -100,13 +100,17 @@ def test_catalog_type_scan_catches_injection(duck):
             oracle_spec=object(),
             oracle="SELECT SUM(o_custkey) AS s FROM orders",
         ),
+        "bit_q": SimpleNamespace(
+            oracle_spec=object(),
+            oracle="SELECT CAST('101' AS BIT) AS b FROM orders LIMIT 1",
+        ),
         "good_q": SimpleNamespace(
             oracle_spec=object(),
             oracle="SELECT CAST(SUM(o_custkey) AS BIGINT) AS s FROM orders",
         ),
     }
     bad = scan_oracle_types(fake)
-    assert "bad_q" in bad and "good_q" not in bad
+    assert "bad_q" in bad and "bit_q" in bad and "good_q" not in bad
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)

@@ -414,6 +414,7 @@ def scan_oracle_types(reg) -> dict[str, list[str]]:
     import duckdb
 
     from etl_manager_spark.workloads.tables import TABLE_NAMES
+    from tools.parity_lib import FORBIDDEN_TOKENS
 
     sf = os.environ.get("SPARK_GRAFT_LINT_SF_DIR", "/root/testdata/sf0.001")
     con = duckdb.connect()
@@ -421,10 +422,6 @@ def scan_oracle_types(reg) -> dict[str, list[str]]:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
-    forbidden = (
-        "HUGEINT", "UHUGEINT", "UTINYINT", "USMALLINT",
-        "UINTEGER", "UBIGINT", "INTERVAL", "UUID",
-    )
     bad: dict[str, list[str]] = {}
     for name in sorted(reg):
         spec = reg[name].oracle_spec
@@ -437,7 +434,7 @@ def scan_oracle_types(reg) -> dict[str, list[str]]:
         hits = [
             f"{col}: {dtype}"
             for col, dtype in zip(rel.columns, rel.types)
-            if any(tok in str(dtype).upper() for tok in forbidden)
+            if any(tok in str(dtype).upper() for tok in FORBIDDEN_TOKENS)
         ]
         if hits:
             bad[name] = hits
