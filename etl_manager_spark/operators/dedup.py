@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_manager_spark.operators.graph import checkpoint_observed
+from etl_manager_spark.operators.materialize import materialize, materialize_observed
 from etl_manager_spark.operators.text import tokens
 
 # NULL-text convention, shared by every signature family here: a document
@@ -173,9 +173,9 @@ def minhash_near_duplicates(
     # per side (round-10 scan audit: 6 corpus scans per execution; the
     # sf0.1 walls of the with/without variants are inside this box's
     # noise band, so the one-signature-pass shape wins on §1.2 grounds)
-    sized = buckets.withColumn(
+    sized = materialize(buckets.withColumn(
         "bucket_n", F.count(F.lit(1)).over(Window.partitionBy("bucket"))
-    ).filter(F.col("bucket_n") <= max_bucket_size).localCheckpoint(eager=True)
+    ).filter(F.col("bucket_n") <= max_bucket_size))
     pairs = (
         sized.alias("a")
         .join(sized.alias("b"), on="bucket")
@@ -215,17 +215,16 @@ def connected_components_star(
     At the fixpoint the edge set is a union of stars centered at each
     component's minimum id; labels read directly off the edges. Returns
     (id, cluster_id) for every node appearing in ``pairs``."""
-    nodes = (
+    nodes = materialize(
         pairs.select(F.col(id_a).alias("id"))
         .union(pairs.select(F.col(id_b).alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # canonical orientation u > v, self-loops dropped. Edge counts ride
     # the checkpoint job — a separate .count() would be one-to-two extra
     # jobs PER ROUND (the checkpointed scan is cheap, but each count is a
     # full job barrier).
-    edges, n_edges = checkpoint_observed(
+    edges, n_edges = materialize_observed(
         pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
             F.least(F.col(id_a), F.col(id_b)).alias("v"),
@@ -276,7 +275,7 @@ def connected_components_star(
 
     converged = False
     for _ in range(max_iterations):
-        new_edges, n_new = checkpoint_observed(
+        new_edges, n_new = materialize_observed(
             small_star(large_star(edges)), F.count(F.lit(1))
         )
         # set-equality in ONE subtraction job, not two: both sides are
@@ -348,17 +347,15 @@ def near_dup_clusters(
     # expensive pipeline (MinHash signatures -> LSH band join -> verify), and
     # the loop below re-reads edges every round — without this checkpoint each
     # round would recompute the whole upstream pair generation.
-    edges = (
+    edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("cluster_id", F.col("id"))
-        .localCheckpoint(eager=True)
     )
     converged = False
     for _ in range(max_iterations):
@@ -373,7 +370,7 @@ def near_dup_clusters(
         # non-NULL exactly once per id), and ride the changed-row count on
         # the checkpoint job — a limit(1).count() over the checkpointed
         # result would be a full extra job barrier per round.
-        agged, changed = checkpoint_observed(
+        agged, changed = materialize_observed(
             neighbor_labels.unionByName(
                 labels.withColumn("old_label", F.col("cluster_id"))
             )
@@ -453,7 +450,7 @@ def pairwise_jaccard(
     # dominant saving at scale), and the candidate-bounded set table is
     # checkpointed so both pair sides read one materialization instead
     # of re-running the explode/groupBy per join side.
-    pairs = pairs.localCheckpoint(eager=True)
+    pairs = materialize(pairs)
     cand_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .union(pairs.select(F.col("id_b").alias(id_col)))
@@ -470,12 +467,12 @@ def pairwise_jaccard(
         .groupBy("_sid")
         .agg(F.collect_list("_tok").alias("_toks"))
     )
-    sets = ids.join(tokensets, on="_sid", how="left").select(
+    sets = materialize(ids.join(tokensets, on="_sid", how="left").select(
         "_sid",
         F.coalesce(
             F.col("_toks"), F.array().cast("array<string>")
         ).alias("_toks"),
-    ).localCheckpoint(eager=True)
+    ))
     return (
         pairs.join(sets.withColumnRenamed("_sid", "id_a"), on="id_a")
         .withColumnRenamed("_toks", "toks_a")
@@ -509,9 +506,9 @@ def ngram_jaccard_pairs(
     # self-join sides — eagerly materialized so the tokenize runs once
     # per call, not once per consumer (this is the standard materialized
     # posting table of inverted-index dedup; ids + tokens, no documents)
-    tok = df.select(
+    tok = materialize(df.select(
         F.col(id_col), F.explode(F.array_distinct(tokens(text_col))).alias("tok")
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     sizes = tok.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     inter = (
         tok.alias("a")
@@ -655,10 +652,9 @@ def sorted_neighborhood_pairs(
     spark = df.sparkSession
     parts = n_partitions or spark.sparkContext.defaultParallelism
     names = df.select(F.col(name_col).alias("name_a")).distinct()
-    base = (
+    base = materialize(
         names.repartitionByRange(parts, "name_a")
         .withColumn("_snp", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     wloc = Window.partitionBy("_snp").orderBy("name_a")
     # round 11: the forward-overlap replication plan is computed IN-PLAN
@@ -756,7 +752,7 @@ def incremental_minhash_dedup(
     # candidates are reused by the corpus-side semi-join below and the
     # verify join; one materialization keeps the band-bucket join from
     # running twice
-    cand = cand.localCheckpoint(eager=True)
+    cand = materialize(cand)
     # per-DOCUMENT token UNION (duplicate ids merge), the same
     # resolution as pairwise_jaccard/minhash_signatures - a per-row
     # formulation would emit duplicate pair rows for re-ingested ids
@@ -977,12 +973,11 @@ def ngram_containment_pairs(
     )
     # distinct() across rows: duplicated doc_ids must not inflate the
     # shingle multiset (containment is a SET ratio; > 1 is impossible)
-    g = (
+    g = materialize(
         staged.select(F.col(id_col), F.explode(grams).alias("gram"))
         .distinct()
         # §8: size aggregate + both self-join sides read this posting
         # table; one shingle pass per call instead of three
-        .localCheckpoint(eager=True)
     )
     sizes = g.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     inter = (

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_manager_spark.operators.materialize import materialize
+
 
 def heavy_hitters_two_pass(
     df: DataFrame,
@@ -90,9 +92,9 @@ def heavy_hitters_two_pass(
     # bounded output (≤ partitions·(k+1) candidates + one marker per
     # task), consumed by both the candidate set and the total — one
     # execution of the Python pass
-    mapped = pandas_side.mapInPandas(
+    mapped = materialize(pandas_side.mapInPandas(
         _local_candidates, schema=f"{col} {dtype}, _part_n long"
-    ).localCheckpoint(eager=True)
+    ))
     cands = mapped.filter(F.col("_part_n").isNull()).select(col).distinct()
     if is_float:
         cands = cands.unionAll(clean.filter(F.isnan(col)).limit(1))

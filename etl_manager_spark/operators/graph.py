@@ -17,27 +17,10 @@ quantization rule.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def checkpoint_observed(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
-    """Eagerly ``localCheckpoint`` ``df`` and return it together with the
-    integer aggregate ``metric`` over its rows (e.g. ``F.count(F.lit(1))``),
-    computed by the checkpoint's own job via ``DataFrame.observe``: an
-    iterative loop's convergence count costs no job of its own.
-
-    Invariant: ``Observation.get`` blocks, with no timeout, until a job
-    over the observed frame finishes. The checkpoint here is eager, so
-    its job has fired the listener before ``get`` is read. Making it
-    lazy, or running under Spark Connect, would turn every caller's loop
-    (connected components and label propagation in operators/dedup.py,
-    BFS and k-core peeling here) into an indefinite hang rather than an
-    error — keep the observe and the eager checkpoint together, here.
-    """
-    obs = Observation()
-    out = df.observe(obs, metric.alias("v")).localCheckpoint(eager=True)
-    return out, int(obs.get["v"])
+from etl_manager_spark.operators.materialize import materialize, materialize_observed
 
 
 def triangle_counts(
@@ -111,7 +94,7 @@ def pagerank_quantized(
         .distinct()
     )
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges = sym.join(deg, on="src").localCheckpoint(eager=True)
+    edges = materialize(sym.join(deg, on="src"))
     ranks = deg.select("src", F.lit(1.0).alias("r"))
     for _ in range(iterations):
         contrib = edges.join(ranks, on="src").select(
@@ -228,19 +211,18 @@ def bfs_distances(
     so a recursive-CTE reachability-with-min-distance oracle agrees."""
     from pyspark.sql import types as T
 
-    sym = (
+    sym = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionAll(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # seed schema DERIVED from the edge columns: hard-coding 'id long'
     # made string-id graphs silently return only the source (the long ==
     # string join cast every id to null) and crashed on string sources
     id_type = sym.schema["src"].dataType
-    visited = (
+    visited = materialize(
         sym.sparkSession.createDataFrame(
             [(source_id, 0)],
             T.StructType(
@@ -250,13 +232,12 @@ def bfs_distances(
                 ]
             ),
         )
-        .localCheckpoint(eager=True)
     )
     frontier = visited
     for depth in range(1, max_depth + 1):
         # the frontier-emptiness probe rides the checkpoint job — a
         # limit(1).count() would be an extra job barrier per BFS layer
-        nxt, n_next = checkpoint_observed(
+        nxt, n_next = materialize_observed(
             frontier.join(sym, frontier["id"] == sym["src"])
             .select(F.col("dst").alias("id"))
             .distinct()
@@ -266,7 +247,7 @@ def bfs_distances(
         )
         if n_next == 0:
             break
-        visited = visited.unionAll(nxt).localCheckpoint(eager=True)
+        visited = materialize(visited.unionAll(nxt))
         frontier = nxt
     return visited
 
@@ -305,7 +286,7 @@ def kcore_subgraph(
     """
     # edge counts ride the checkpoint jobs instead of a separate
     # .count() job per peeling round
-    e, n_edges = checkpoint_observed(
+    e, n_edges = materialize_observed(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct(),
         F.count(F.lit(1)),
     )
@@ -319,7 +300,7 @@ def kcore_subgraph(
             .filter(F.col("deg") >= k)
             .select("node")
         )
-        e2, n2 = checkpoint_observed(
+        e2, n2 = materialize_observed(
             e.join(keep.withColumnRenamed("node", "a"), on="a", how="semi")
             .join(keep.withColumnRenamed("node", "b"), on="b", how="semi")
             .select("a", "b"),

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_manager_spark.operators.materialize import materialize
+
 
 def ordered_cumsum(
     df: DataFrame,
@@ -59,10 +61,9 @@ def ordered_cumsum(
     # aggregates that defeat AQE stage reuse (the round-10 fully-lazy
     # experiment measured that duplication costing more than this one
     # checkpoint job on several callers)
-    base = (
+    base = materialize(
         df.repartitionByRange(parts, *order_cols)
         .withColumn("_ocs_part", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     totals = base.groupBy("_ocs_part").agg(
         F.count(F.lit(1)).alias("_n"),
@@ -268,10 +269,9 @@ def ordered_lag(
             out.append(F.col(c).asc() if asc else F.col(c).desc())
         return out
 
-    base = (
+    base = materialize(
         df.repartitionByRange(parts, *_cols())
         .withColumn("_olg_part", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     # round 11: the replication plan is computed IN-PLAN from the
     # checkpointed base (overlap_plan — same math as the former driver

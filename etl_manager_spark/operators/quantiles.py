@@ -67,6 +67,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_manager_spark.operators.materialize import materialize
+
 _GK = "_qg"  # struct-wrapped group key: null-safe in groupBy AND joins
 
 
@@ -145,10 +147,9 @@ def grouped_value_cdf(
     # the input per branch (conformal: 56 → ~100 stages), which is the
     # wrong trade at scale where the distinct-value table is
     # corpus-sized.
-    base_all = (
+    base_all = materialize(
         vc.repartitionByRange(parts, _GK, "_qv")
         .withColumn("_qp", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     base = base_all.filter(F.col("_qv").isNotNull())
     # totals (O(partitions + groups) rows by the few-groups contract) is
@@ -159,13 +160,12 @@ def grouped_value_cdf(
     # full task wave per call for ~empty partitions — the partial
     # aggregation over base_all stays parallel either way (only the
     # O(partitions + groups)-row final merge runs in the one task).
-    totals = (
+    totals = materialize(
         base_all.groupBy(
             "_qp", _GK, F.col("_qv").isNull().alias("_qvnull")
         )
         .agg(F.sum("_qc").cast("long").alias("_qn"))
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
     # per-(partition, group) offsets: prefix-sum the totals over the
     # partitions STRICTLY BEFORE each one, windowed per group — the

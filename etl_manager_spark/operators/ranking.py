@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_manager_spark.operators.materialize import materialize
 from etl_manager_spark.operators.text import token_count, tokens
 
 
@@ -92,7 +93,7 @@ def tfidf_top_terms(
     # (id, term)-bounded tf table consumed by the df rollup AND the
     # scored join — one tokenize pass, not two (§8; the r10 plan audit
     # showed 3 corpus scans per call, pruning having broken lazy reuse)
-    tf = term_frequencies(df, id_col, text_col).localCheckpoint(eager=True)
+    tf = materialize(term_frequencies(df, id_col, text_col))
     dfreq = document_frequencies(tf)
     scored = _attach_scalar(
         tf.join(F.broadcast(dfreq), on="term"), ndocs
@@ -163,12 +164,12 @@ def bm25_scores(
     # the per-term join) would otherwise each re-scan the corpus — the
     # r10 plan audit showed 5 corpus scans per call; per-branch column
     # pruning breaks lazy exchange reuse
-    lens = df.select(
+    lens = materialize(df.select(
         F.col(id_col).alias("id"),
         # token_count carries the nullif(-1) legacy-ANSI guard, so
         # NULL-text docs contribute NULL (avg-ignored), never dl=-1
         token_count(text_col).alias("dl"),
-    ).localCheckpoint(eager=True)
+    ))
     # lens is a 1:1 projection of df's rows, so the distinct-id count
     # over it IS the former distinct-id count over df — no corpus pass
     ndocs = (
@@ -180,9 +181,9 @@ def bm25_scores(
     if tf is None:
         # query-term-bounded (≤ |qterms| rows per doc): checkpoint so
         # dfreq and the per-term join share one tokenize pass
-        tf = term_frequencies(df, id_col, text_col).filter(
+        tf = materialize(term_frequencies(df, id_col, text_col).filter(
             F.col("term").isin(qterms)
-        ).localCheckpoint(eager=True)
+        ))
     # else: the caller passes its own (id, term, tf) table ALREADY
     # restricted to the query terms (and typically checkpointed), so a
     # query that needs both the scores and another per-term aggregate
@@ -452,10 +453,9 @@ def bigram_lm_scores(
     # persist of the stream is no better: its CacheManager entry is
     # matched by canonical plan, so repeated invocations silently read
     # warm cache and a repeated-measurement harness times cache reads.
-    tc = (
+    tc = materialize(
         token_stream.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     pairs = token_stream.filter(F.col("w2").isNotNull())
     bigram_counts = tc.filter(F.col("w2").isNotNull()).select(

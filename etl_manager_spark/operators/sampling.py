@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_manager_spark.operators.materialize import materialize
+
 _HEX_SPACE = 16**8
 
 
@@ -185,13 +187,12 @@ def temperature_resample(
     sqrt_q = F.floor(
         F.sqrt(F.col("n_in_stratum").cast("double")) * F.lit(1e9) + F.lit(0.5)
     ).cast("long")
-    counts = (
+    counts = materialize(
         df.groupBy(strata_col)
         .agg(F.count(F.lit(1)).alias("n_in_stratum"))
         .withColumn("_sqrt_q", sqrt_q)
         # §8: strata-bounded table consumed by the Σ sqrt_q total AND
         # the quota projection — one fact pass, not two
-        .localCheckpoint(eager=True)
     )
     total = counts.agg(F.sum("_sqrt_q").alias("_total_q"))
     quotas = counts.crossJoin(F.broadcast(total)).select(

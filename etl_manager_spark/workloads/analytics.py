@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from etl_manager_spark.functions.exact import dec_sum
 from etl_manager_spark.operators import behavior as B
 from etl_manager_spark.operators import ranking as R
+from etl_manager_spark.operators.materialize import materialize
 from etl_manager_spark.workloads import workload
 from etl_manager_spark.workloads.tables import load_tables, spread
 
@@ -638,7 +639,7 @@ def events_value_outliers(spark, sf_dir):
         dec_sum("value").alias("s"),
         dec_sumsq("value").alias("ss"),
     )
-    m = stats.select(
+    m = materialize(stats.select(
         "event_type",
         "n",
         (F.col("s") / F.col("n")).alias("mean"),
@@ -654,7 +655,7 @@ def events_value_outliers(spark, sf_dir):
         ).alias("std"),
     # §8: the |types|-bounded moment table feeds the flag join AND the
     # final projection — one moment pass, not two
-    ).localCheckpoint(eager=True)
+    ))
     outliers = (
         ev.join(F.broadcast(m), on="event_type")
         .filter(F.abs(F.col("value") - F.col("mean")) > F.lit(3.0) * F.col("std"))
@@ -965,14 +966,13 @@ def gapfill_locf_user_hours(spark, sf_dir):
     from pyspark.sql import Window
 
     t = load_tables(spark, sf_dir)
-    hourly = (
+    hourly = materialize(
         t["events"]
         .filter(F.col("user_id") < 10)
         .groupBy("user_id", F.date_trunc("hour", "ts").alias("hour_ts"))
         .agg(dec_sum("value").alias("v"))
         # hours×10-users-bounded series consumed by the bounds pass AND
         # the grid join — one fact pass, not two (§8)
-        .localCheckpoint(eager=True)
     )
     bounds = hourly.groupBy("user_id").agg(
         F.min("hour_ts").alias("mn"), F.max("hour_ts").alias("mx")
@@ -1068,9 +1068,9 @@ def mad_robust_outliers_events(spark, sf_dir):
     # branches (derived table, flag pass, final join); eager-checkpoint
     # the tiny frames so the bracket/interpolation machinery runs once
     # instead of once per consumer (round-10 profile: 74 jobs → ~30)
-    med = percentiles_from_cdf(
+    med = materialize(percentiles_from_cdf(
         cdf, groups, ["event_type"], {"med": 0.5}
-    ).coalesce(1).localCheckpoint(eager=True)
+    ).coalesce(1))
     # |v − med| value-count table derived from the distinct-value table:
     # same doubles (_qv IS cast(value as double)), same multiplicities
     # (_qc), one fact pass total instead of three
@@ -1080,9 +1080,9 @@ def mad_robust_outliers_events(spark, sf_dir):
         F.abs(F.col("_qv") - F.col("med")).alias("_adev"),
         "_qc",
     )
-    mad = grouped_exact_percentiles(
+    mad = materialize(grouped_exact_percentiles(
         adev, ["event_type"], "_adev", {"mad": 0.5}, weight_col="_qc"
-    ).coalesce(1).localCheckpoint(eager=True)
+    ).coalesce(1))
     flagged = (
         vc.join(F.broadcast(med), on="event_type")
         .join(F.broadcast(mad), on="event_type")
@@ -1140,7 +1140,7 @@ def vocab_coverage_documents(spark, sf_dir):
     from pyspark.sql import Window
 
     t = load_tables(spark, sf_dir)
-    counts = (
+    counts = materialize(
         t["documents"]
         .select(F.explode(R.tokens("text")).alias("term"))
         .filter(F.col("term") != "")
@@ -1148,7 +1148,6 @@ def vocab_coverage_documents(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("cnt"))
         # vocabulary-bounded counts consumed by the total AND the top-100
         # rank — one tokenize pass, not two (§8)
-        .localCheckpoint(eager=True)
     )
     total = counts.agg(F.sum("cnt").alias("total"))
     top = counts.orderBy(F.desc("cnt"), F.asc("term")).limit(100)
@@ -1400,14 +1399,13 @@ def gapfill_linear_user_hours(spark, sf_dir):
     from pyspark.sql import Window
 
     t = load_tables(spark, sf_dir)
-    hourly = (
+    hourly = materialize(
         t["events"]
         .filter(F.col("user_id") < 10)
         .groupBy("user_id", F.date_trunc("hour", "ts").alias("hour_ts"))
         .agg(dec_sum("value").alias("v"))
         # hours×10-users-bounded series consumed by the bounds pass AND
         # the grid join — one fact pass, not two (§8)
-        .localCheckpoint(eager=True)
     )
     bounds = hourly.groupBy("user_id").agg(
         F.min("hour_ts").alias("mn"), F.max("hour_ts").alias("mx")
@@ -1904,10 +1902,7 @@ def assoc_rules_event_pairs(spark, sf_dir):
     # users×|types|-bounded basket table consumed by four branches
     # (user count, singles, both self-join sides) — one fact pass, not
     # four re-distincts of events (§8)
-    baskets = (
-        t["events"].select("user_id", "event_type").distinct()
-        .localCheckpoint(eager=True)
-    )
+    baskets = materialize(t["events"].select("user_id", "event_type").distinct())
     n_users = baskets.agg(
         F.countDistinct("user_id").alias("_n_users")
     )
@@ -2156,7 +2151,7 @@ def rolling_7d_active_users(spark, sf_dir):
     distinct-count per grid day finishes. Fan-out is bounded by the
     window length, never by data volume."""
     t = load_tables(spark, sf_dir)
-    daily = (
+    daily = materialize(
         t["events"]
         .select(
             F.date_trunc("day", "ts").cast("date").alias("d"),
@@ -2165,7 +2160,6 @@ def rolling_7d_active_users(spark, sf_dir):
         .distinct()
         # days×active-users-bounded proxy consumed by the day grid AND
         # the range join — one fact pass, not two (§8)
-        .localCheckpoint(eager=True)
     )
     days = daily.select("d").distinct().select(F.col("d").alias("day"))
     return (
@@ -2520,9 +2514,9 @@ def rrf_fuse_bm25_tfidf_documents(spark, sf_dir):
     # for both scorers — eagerly checkpointed, so the explode+agg runs
     # once, not once per ranker) and the distinct-doc count rides
     # in-plan as a broadcast scalar instead of an eager driver count
-    tf = R.term_frequencies(docs).filter(
+    tf = materialize(R.term_frequencies(docs).filter(
         F.col("term").isin(qterms)
-    ).localCheckpoint(eager=True)
+    ))
     bm = R.bm25_scores(docs, _BM25_TERMS, top=100, tf=tf)
     dfreq = R.document_frequencies(tf)
     ndocs = (
@@ -2691,11 +2685,10 @@ def pmi_collocations_documents(spark, sf_dir):
     docs2 = spread(t["documents"], spark).select(tk.alias("tk"))
     # vocabulary-bounded count table consumed by three branches (total,
     # both unigram probes) — one tokenize pass, not three (§8)
-    uni = (
+    uni = materialize(
         docs2.select(F.explode("tk").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     tot = uni.agg(F.sum("c").alias("_t"))
     pair_structs = F.when(
@@ -2710,12 +2703,11 @@ def pmi_collocations_documents(spark, sf_dir):
     ).otherwise(F.array())
     # bigram-vocabulary-bounded table consumed by the total AND the
     # scored probe — one pair-explode pass, not two (§8)
-    big = (
+    big = materialize(
         docs2.select(F.explode(pair_structs).alias("pr"))
         .select(F.col("pr.w1").alias("w1"), F.col("pr.w2").alias("w2"))
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cab"))
-        .localCheckpoint(eager=True)
     )
     # B is the UNFILTERED bigram total (P(a,b) denominators are corpus
     # probabilities); the min-count gate only prunes which pairs score
@@ -2990,14 +2982,13 @@ def vocab_kl_drift_documents(spark, sf_dir):
     # halves partition the remaining rows, so (0,0) rows cannot arise),
     # and the vocabulary-bounded table is checkpointed for its two
     # consumers (totals, scored top-50) — 4 corpus tokenizes → 1.
-    vocab = (
+    vocab = materialize(
         toks.filter(F.col("doc_id").isNotNull())
         .groupBy("tok")
         .agg(
             F.count(F.when(F.col("doc_id") < 250, 1)).alias("cnt_a"),
             F.count(F.when(F.col("doc_id") >= 250, 1)).alias("cnt_b"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = vocab.groupBy().agg(
         F.sum("cnt_a").alias("na"),
@@ -3702,9 +3693,9 @@ def countmin_calibration_events(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     # users-bounded exact counts consumed by the sketch build AND the
     # estimate probe — one fact pass, not two (§8)
-    exact = t["events"].groupBy("user_id").agg(
+    exact = materialize(t["events"].groupBy("user_id").agg(
         F.count(F.lit(1)).alias("c")
-    ).localCheckpoint(eager=True)
+    ))
 
     def cell_of(d_col, key_col):
         return (
@@ -3782,9 +3773,9 @@ def conversion_latency_events(spark, sf_dir):
     ev = t["events"]
     # users-bounded first-view table consumed by the purchase probe AND
     # the closing join — one view-scan, not two (§8)
-    fv = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
+    fv = materialize(ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
         F.min("ts").alias("first_view")
-    ).localCheckpoint(eager=True)
+    ))
     fp = (
         ev.filter(F.col("event_type") == "purchase")
         .join(fv, on="user_id")
@@ -4119,12 +4110,12 @@ def ndcg_bm25_documents(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     docs = spread(t["documents"], spark)
-    tf = term_frequencies(docs).filter(
+    tf = materialize(term_frequencies(docs).filter(
         F.col("term").isin(sorted(set(_BM25_TERMS)))
-    ).localCheckpoint(eager=True)
+    ))
     scores = R.bm25_scores(docs, _BM25_TERMS, tf=tf)
     rel = tf.groupBy("id").agg(F.sum("tf").cast("long").alias("rel"))
-    joined = scores.join(rel, on="id").localCheckpoint(eager=True)
+    joined = materialize(scores.join(rel, on="id"))
     term_q = lambda: F.floor(
         F.col("rel").cast("double")
         / F.log2(F.col("rnk") + F.lit(1.0))
@@ -4287,9 +4278,9 @@ def rbo_bm25_vs_tfidf(spark, sf_dir):
     # for both scorers — eagerly checkpointed, so the explode+agg runs
     # once, not once per ranker) and the distinct-doc count rides
     # in-plan as a broadcast scalar instead of an eager driver count
-    tf = R.term_frequencies(docs).filter(
+    tf = materialize(R.term_frequencies(docs).filter(
         F.col("term").isin(qterms)
-    ).localCheckpoint(eager=True)
+    ))
     bm = R.bm25_scores(docs, _BM25_TERMS, top=100, tf=tf)
     dfreq = R.document_frequencies(tf)
     ndocs = (
@@ -4607,9 +4598,7 @@ def skyline_orders_price_date(spark, sf_dir):
     )
     # days-bounded minima consumed by both sides of the suffix-min
     # theta-join — one orders aggregate, not two (§8)
-    daymin = o.groupBy("day").agg(F.min("price_c").alias("minp")).localCheckpoint(
-        eager=True
-    )
+    daymin = materialize(o.groupBy("day").agg(F.min("price_c").alias("minp")))
     later = daymin.select(
         F.col("day").alias("l_day"), F.col("minp").alias("l_minp")
     )
@@ -4710,9 +4699,9 @@ def kneser_ney_bigram_score_documents(spark, sf_dir):
             )
         ).alias("p"),
     ).select("id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    bc = pairs.groupBy("w1", "w2").agg(
+    bc = materialize(pairs.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("long").alias("c12")
-    ).localCheckpoint(eager=True)
+    ))
     ctx = bc.groupBy("w1").agg(
         F.sum("c12").cast("long").alias("c1"),
         F.count(F.lit(1)).cast("long").alias("n1f"),
@@ -4795,7 +4784,7 @@ def theil_decomposition_nation_revenue(spark, sf_dir):
     from etl_manager_spark.functions.exact import dec_sum
 
     t = load_tables(spark, sf_dir)
-    cust = (
+    cust = materialize(
         t["orders"]
         .join(
             F.broadcast(t["customer"].select("c_custkey", "c_nationkey")),
@@ -4810,14 +4799,13 @@ def theil_decomposition_nation_revenue(spark, sf_dir):
         # customers-bounded revenue table consumed by three branches
         # (totals, per-customer terms, per-nation groups) — one pass over
         # the orders⋈customer join, not three (§8)
-        .localCheckpoint(eager=True)
     )
-    tot = cust.agg(
+    tot = materialize(cust.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         dec_sum("r").alias("sr"),
     # one-row totals consumed by terms, between-groups AND the final
     # projection — materialize once
-    ).localCheckpoint(eager=True)
+    ))
     mu = F.col("sr") / F.col("n")
     terms = cust.crossJoin(F.broadcast(tot)).select(
         "nat",
@@ -4999,7 +4987,7 @@ def symspell_pairs_vocab_documents(spark, sf_dir):
     needs. Verification filter (= 1) makes the blocking loss-free for
     distance-1 typos; the oracle replays generation + join + verify."""
     t = load_tables(spark, sf_dir)
-    vocab = (
+    vocab = materialize(
         spread(t["documents"], spark)
         .select(F.explode(F.filter(F.split("text", r"\s+"), lambda x: x != "")).alias("tok0"))
         .select(F.lower("tok0").alias("word"))
@@ -5010,7 +4998,6 @@ def symspell_pairs_vocab_documents(spark, sf_dir):
         .limit(2000)
         # 2000-word vocab consumed by both deletion-neighborhood sides —
         # one tokenize pass, not two (§8)
-        .localCheckpoint(eager=True)
     )
     dels = vocab.select(
         "word", "freq",

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from etl_manager_spark.operators.materialize import materialize
 from etl_manager_spark.workloads import workload
 from etl_manager_spark.workloads.scratch import scratch_dir
 from etl_manager_spark.workloads.tables import load_tables
@@ -265,13 +266,12 @@ def chi2_event_type_by_dow(spark, sf_dir):
     aggregate, two tiny marginal aggregates broadcast back, one-row
     output."""
     t = load_tables(spark, sf_dir)
-    cells = (
+    cells = materialize(
         t["events"]
         .groupBy("event_type", F.dayofweek("ts").alias("dow"))
         .agg(F.count(F.lit(1)).alias("o"))
         # |types|×7-bounded table consumed by four branches (row/col
         # marginals, total, contributions) — one fact pass, not four (§8)
-        .localCheckpoint(eager=True)
     )
     rt = cells.groupBy("event_type").agg(F.sum("o").alias("r"))
     ct = cells.groupBy("dow").agg(F.sum("o").alias("c"))
@@ -441,9 +441,7 @@ def benford_first_digit_values(spark, sf_dir):
     )
     # 9-row digit counts consumed by the total AND the final projection —
     # one fact pass, not two (§8)
-    c = d.groupBy("digit").agg(F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
-    )
+    c = materialize(d.groupBy("digit").agg(F.count(F.lit(1)).alias("n")))
     total = c.agg(F.sum("n").alias("total"))
     return c.crossJoin(F.broadcast(total)).select(
         "digit",
@@ -1311,7 +1309,7 @@ def t_closeness_audit_events(spark, sf_dir):
     bounded (≤|types|-term) integer sums; global marginals broadcast."""
     t = load_tables(spark, sf_dir)
     ev = t["events"]
-    cells = ev.groupBy(
+    cells = materialize(ev.groupBy(
         F.hour("ts").alias("hod"),
         F.floor(F.col("value") / F.lit(50.0)).alias("band"),
         "event_type",
@@ -1319,7 +1317,7 @@ def t_closeness_audit_events(spark, sf_dir):
     # hour/band group too), so the global type marginal and the grand
     # total are rollups of the cube — one fact pass, not three (§8);
     # the cube is (24+NULL)×bands×|types|-bounded
-    ).agg(F.count(F.lit(1)).cast("long").alias("c")).localCheckpoint(eager=True)
+    ).agg(F.count(F.lit(1)).cast("long").alias("c")))
     grp = cells.groupBy("hod", "band").agg(F.sum("c").cast("long").alias("n_g"))
     glob = cells.groupBy("event_type").agg(F.sum("c").cast("long").alias("ct"))
     nn = cells.agg(F.sum("c").cast("long").alias("n"))

@@ -16,6 +16,7 @@ from etl_manager_spark.operators import curation as C
 from etl_manager_spark.operators import ranking as R
 from etl_manager_spark.operators import sampling as SMP
 from etl_manager_spark.operators import text as X
+from etl_manager_spark.operators.materialize import materialize
 from etl_manager_spark.workloads import workload
 from etl_manager_spark.workloads.tables import load_tables, spread
 
@@ -559,10 +560,9 @@ def kcenter_coreset_embeddings(spark, sf_dir):
     from etl_manager_spark.functions.exact import lit_double_array
 
     t = load_tables(spark, sf_dir)
-    e = (
+    e = materialize(
         spread(t["embeddings"], spark)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        .localCheckpoint()
     )
 
     def sqdist(center_vals):

@@ -18,6 +18,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_manager_spark.operators import graph as G
+from etl_manager_spark.operators.materialize import materialize
 from etl_manager_spark.operators.ranking import quantize
 from etl_manager_spark.operators.text import tokens
 from etl_manager_spark.workloads import workload
@@ -368,7 +369,7 @@ def psi_drift_orders_price(spark, sf_dir):
         F.sum(1 - F.col("is_a")).cast("long").alias("cnt_b"),
     )
     bins = spark.range(10).select(F.col("id").alias("bin"))
-    filled = (
+    filled = materialize(
         bins.join(counts, on="bin", how="left")
         .select(
             "bin",
@@ -377,7 +378,6 @@ def psi_drift_orders_price(spark, sf_dir):
         )
         # §8: 10-row bin table consumed by the totals AND the final
         # projection — one fact pass, not two
-        .localCheckpoint(eager=True)
     )
     tot = filled.agg(
         F.sum("cnt_a").cast("long").alias("na"),
@@ -439,11 +439,11 @@ def stickiness_dau_mau_events(spark, sf_dir):
     # COUNT(DISTINCT user_id): rows are unique per (month, day, user) and
     # count(col) skips the at-most-one NULL-user row per group exactly
     # like count_distinct did.
-    base = ev.select(
+    base = materialize(ev.select(
         F.date_trunc("month", "ts").cast("date").alias("month"),
         F.date_trunc("day", "ts").cast("date").alias("dy"),
         "user_id",
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     dau = base.groupBy("month", "dy").agg(
         F.count("user_id").cast("long").alias("dau")
     )
@@ -589,11 +589,11 @@ def markov_transitions_events(spark, sf_dir):
         F.col("event_type").alias("src"),
         F.lead("event_type").over(w).alias("dst"),
     ).filter(F.col("dst").isNotNull())
-    trans = chain.groupBy("src", "dst").agg(
+    trans = materialize(chain.groupBy("src", "dst").agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     # |types|²-bounded matrix consumed by the row-total pass AND the
     # probability join — one fact pass, not two (§8)
-    ).localCheckpoint(eager=True)
+    ))
     tot = trans.groupBy("src").agg(F.sum("cnt").cast("long").alias("total"))
     return trans.join(tot, on="src").select(
         "src",
@@ -681,12 +681,12 @@ def activity_streaks_recursive_events(spark, sf_dir):
     for k in range(1, STRIDE):
         run = run & (F.lead("day", k).over(w) == F.date_add("day", k))
         cond = F.when(run, F.lit(k)).otherwise(cond)
-    # localCheckpoint is load-bearing: the recursive step re-reads this
-    # view EVERY round, and a plain logical view would re-run the
+    # the materialization is load-bearing: the recursive step re-reads
+    # this view EVERY round, and a plain logical view would re-run the
     # distinct + window ~rounds times.
-    days.select("user_id", "day", cond.alias("step")).coalesce(
-        8
-    ).localCheckpoint(eager=True).createOrReplaceTempView(view)
+    materialize(
+        days.select("user_id", "day", cond.alias("step")).coalesce(8)
+    ).createOrReplaceTempView(view)
     return spark.sql(f"""
       WITH RECURSIVE chain(user_id, start_day, day, len) AS (
         SELECT d.user_id, d.day, d.day, CAST(1 AS BIGINT)
@@ -785,13 +785,12 @@ def label_spreading_neardup(spark, sf_dir):
     node's degree, not the graph); two rounds unrolled — the same
     bounded-round contract as the unrolled PageRank."""
     pairs = neardup_pairs_stored(spark, sf_dir)
-    sym = (
+    sym = materialize(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     t = load_tables(spark, sf_dir)
     lab0 = (
@@ -1014,7 +1013,7 @@ def source_overlap_matrix_documents(spark, sf_dir):
     sizes join are bounded by |sources|² (domain-bounded dimension, 20
     here). No windows."""
     t = load_tables(spark, sf_dir)
-    sh = (
+    sh = materialize(
         spread(t["documents"], spark)
         .select(
             "source",
@@ -1035,7 +1034,6 @@ def source_overlap_matrix_documents(spark, sf_dir):
         # (source, shingle) proxy consumed by the size pass AND both
         # sides of the intersection self-join — one shingle-explode pass,
         # not three (§8)
-        .localCheckpoint(eager=True)
     )
     sizes = sh.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_shingles")

@@ -22,6 +22,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_manager_spark.operators import ranking as R
+from etl_manager_spark.operators.materialize import materialize
 from etl_manager_spark.operators.prefix import ordered_cumsum
 from etl_manager_spark.operators.quantiles import grouped_exact_percentiles
 from etl_manager_spark.operators.topk import rank_bounded
@@ -239,10 +240,10 @@ def average_precision_bm25(spark, sf_dir):
     top-10 frame (b.rnk <= a.rnk) — no running window at all; each P@i
     quantizes before the integer sum."""
     joined = _bm25_joined(spark, sf_dir)
-    top10 = rank_bounded(
+    top10 = materialize(rank_bounded(
         joined.orderBy(F.desc("score_q"), F.asc("id")).limit(10),
         [("score_q", "desc"), ("id", "asc")],
-    ).localCheckpoint(eager=True)  # tiny frame, read twice below
+    ))  # tiny frame, read twice below
     a = top10.alias("a")
     b = top10.alias("b")
     pat = (
@@ -414,15 +415,15 @@ def _daily_type_mean(spark, sf_dir):
     """(event_type, day, m): per-type daily mean of events.value with the
     nano-quantize-then-divide discipline — the shared series behind the
     per-type time-series estimators (record-highs, Haar, Hurst, spectral,
-    PACF, Newey-West, rolling-origin). Callers eagerly localCheckpoint the
-    result: every one of them fans the series into several consumers
-    (day-zero min, moments, residuals, lag joins), and without the
-    materialization each consumer re-reads and re-aggregates the events
-    fact table — the measured round-10 plans showed 6-12 parquet scans per
-    query for a table of at most |types|·|days| rows (guide §1.2/§8:
-    decide on the tiny proxy, touch the heavy rows once)."""
+    PACF, Newey-West, rolling-origin). The result is materialized here:
+    every caller fans the series into several consumers (day-zero min,
+    moments, residuals, lag joins), and without the materialization each
+    consumer re-reads and re-aggregates the events fact table — the
+    measured round-10 plans showed 6-12 parquet scans per query for a
+    table of at most |types|·|days| rows (guide §1.2/§8: decide on the
+    tiny proxy, touch the heavy rows once)."""
     t = load_tables(spark, sf_dir)
-    return (
+    return materialize(
         spread(t["events"], spark)
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(
@@ -431,6 +432,16 @@ def _daily_type_mean(spark, sf_dir):
                 / F.count(F.lit(1)).cast("double") / F.lit(1000000000.0)
             ).alias("m")
         )
+    )
+
+
+def _day_index(daily):
+    """(event_type, t, m): ``daily`` with each day replaced by its offset
+    ``t`` from the type's first day, the integer time axis of the per-type
+    estimators (a lazy frame over ``daily``)."""
+    t0 = daily.groupBy("event_type").agg(F.min("day").alias("day0"))
+    return daily.join(F.broadcast(t0), "event_type").select(
+        "event_type", F.datediff("day", "day0").alias("t"), "m"
     )
 
 
@@ -490,7 +501,7 @@ def kendall_tau_daily_value(spark, sf_dir):
     465 pairs, a century → ~666k), never data-bounded; the heavy
     reduction is the per-day aggregate. Days are strictly ordered (no
     x-ties), value ties enter via the τ-b denominator."""
-    daily = _daily_mean(spark, sf_dir).localCheckpoint(eager=True)
+    daily = materialize(_daily_mean(spark, sf_dir))
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(b, F.col("a.day") < F.col("b.day")).select(
         F.col("a.mv_q").alias("xa"), F.col("b.mv_q").alias("xb")
@@ -597,7 +608,7 @@ def ks_statistic_view_vs_click(spark, sf_dir):
         F.col("event_type").isin("view", "click")
         & F.col("value").isNotNull()
     )
-    vc = f.groupBy(F.col("value").alias("v")).agg(
+    vc = materialize(f.groupBy(F.col("value").alias("v")).agg(
         F.count(F.when(F.col("event_type") == "view", F.lit(1)))
         .cast("long")
         .alias("cv"),
@@ -606,7 +617,7 @@ def ks_statistic_view_vs_click(spark, sf_dir):
         .alias("cc"),
     # distinct-values-bounded counts consumed by the cumsum AND the
     # totals — one fact pass, not two (§8)
-    ).localCheckpoint(eager=True)
+    ))
     cum = ordered_cumsum(vc, [F.asc("v")], ["cv", "cc"])
     tot = vc.groupBy().agg(
         F.sum("cv").cast("long").alias("n_view"),
@@ -729,7 +740,7 @@ def moving_median_daily_value(spark, sf_dir):
     interpolates between nano-quantized INTEGER daily means, so the
     half-way interpolation (a+b)/2 is exact in IEEE and identical in
     both engines."""
-    daily = _daily_mean(spark, sf_dir).localCheckpoint(eager=True)
+    daily = materialize(_daily_mean(spark, sf_dir))
     a, b = daily.alias("a"), daily.alias("b")
     return (
         a.join(
@@ -781,7 +792,7 @@ def zscore_anomaly_days(spark, sf_dir):
     the ±2σ flag compares QUANTIZED z against the integer 2·10⁹, so the
     boundary decision is engine-independent."""
     t = load_tables(spark, sf_dir)
-    daily = t["events"].groupBy(
+    daily = materialize(t["events"].groupBy(
         F.date_trunc("day", "ts").cast("date").alias("day")
     ).agg(
         (F.sum(F.col("value").cast("decimal(18,2)")) * 100)
@@ -789,7 +800,7 @@ def zscore_anomaly_days(spark, sf_dir):
         .alias("tot_c")
     # days-bounded totals consumed by the moment pass AND the per-day
     # z-score pass — one fact read instead of two (§8)
-    ).localCheckpoint(eager=True)
+    ))
     d19 = F.col("tot_c").cast("decimal(19,0)")
     m = daily.groupBy().agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -951,10 +962,7 @@ def jaccard_common_neighbors_neardup(spark, sf_dir):
     # One eager checkpoint of the two-long-column edge list (ids only,
     # the §8 lightweight proxy, same class the CC operators checkpoint)
     # feeds them all.
-    edges = (
-        _neardup_pairs(spark, sf_dir).select("id_a", "id_b")
-        .localCheckpoint(eager=True)
-    )
+    edges = materialize(_neardup_pairs(spark, sf_dir).select("id_a", "id_b"))
     nbrs = edges.select(
         F.col("id_a").alias("node"), F.col("id_b").alias("nbr")
     ).unionByName(
@@ -1184,13 +1192,12 @@ def conditional_entropy_event_chain(spark, sf_dir):
         F.col("event_type").alias("prev"),
         F.lead("event_type").over(w).alias("nxt"),
     )
-    pairs = (
+    pairs = materialize(
         seq.filter(F.col("nxt").isNotNull())
         .groupBy("prev", "nxt")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         # |types|²-bounded transition counts consumed by three branches
         # (row totals, grand total, terms) — one fact pass, not three (§8)
-        .localCheckpoint(eager=True)
     )
     pv = pairs.groupBy("prev").agg(F.sum("c").cast("long").alias("cp"))
     n = pairs.groupBy().agg(F.sum("c").cast("long").alias("nt"))
@@ -1860,7 +1867,7 @@ def dbscan_core_border_noise_embeddings(spark, sf_dir):
     from etl_manager_spark.operators.dedup import connected_components_local
 
     t = load_tables(spark, sf_dir)
-    sub = (
+    sub = materialize(
         t["embeddings"]
         .filter(F.col("vec_id") < 500)
         .select("vec_id", "embedding")
@@ -1868,7 +1875,6 @@ def dbscan_core_border_noise_embeddings(spark, sf_dir):
         # pair fan-out over THIS side's partitions, so spread it or all
         # |sub|²/2 distance folds run on one core (3.3 s → 1.6 s at sf0.1)
         .repartition(16)
-        .localCheckpoint(eager=True)
     )
     a, b = sub.alias("a"), sub.alias("b")
     d2 = F.aggregate(
@@ -1888,9 +1894,7 @@ def dbscan_core_border_noise_embeddings(spark, sf_dir):
         .cast("long")
         .alias("d2_q"),
     )
-    near = pairs.filter(F.col("d2_q") <= _DBSCAN_EPS2_Q).localCheckpoint(
-        eager=True
-    )
+    near = materialize(pairs.filter(F.col("d2_q") <= _DBSCAN_EPS2_Q))
     nbrs = near.select(
         F.col("ia").alias("id"), F.col("ib").alias("nb")
     ).unionAll(near.select(F.col("ib").alias("id"), F.col("ia").alias("nb")))
@@ -1906,13 +1910,12 @@ def dbscan_core_border_noise_embeddings(spark, sf_dir):
     # raises past the budget) instead of paying per-round scheduling
     # overhead for a graph this small.
     cc = connected_components_local(core_edges)
-    clusters = (
+    clusters = materialize(
         core.join(cc, on="id", how="left")
         .select(
             "id",
             F.coalesce("cluster_id", F.col("id")).cast("long").alias("cid"),
         )
-        .localCheckpoint(eager=True)
     )
     bord = (
         nbrs.join(core, on="id", how="anti")
@@ -2354,7 +2357,7 @@ def roc_auc_stopword_lang_documents(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     p = _p_col()
     y = F.when(F.col("lang") == "en", 1).otherwise(0)
-    lv = (
+    lv = materialize(
         spread(t["documents"], spark)
         .select(
             F.floor(p * F.lit(1000.0)).cast("int").alias("p_m"),
@@ -2367,7 +2370,6 @@ def roc_auc_stopword_lang_documents(spark, sf_dir):
         )
         # ≤1001 score-bucket rows consumed by both sides of the
         # cumulative self-join — one corpus pass, not two (§8)
-        .localCheckpoint(eager=True)
     )
     b = lv.select(
         F.col("p_m").alias("b_p_m"), F.col("neg_at").alias("b_neg_at")
@@ -2638,7 +2640,7 @@ def zipf_fit_documents(spark, sf_dir):
     the sums are order-free integers, and slope/intercept are single IEEE
     expressions written identically in both engines."""
     t = load_tables(spark, sf_dir)
-    top = (
+    vocab = materialize(
         spread(t["documents"], spark)
         .select(F.explode(F.filter(F.split("text", r"\s+"), lambda x: x != "")).alias("tok0"))
         .select(F.lower("tok0").alias("tok"))
@@ -2649,10 +2651,8 @@ def zipf_fit_documents(spark, sf_dir):
         # two (§8) — while the heap top-k itself stays in the lazy plan
         # (TakeOrderedAndProject over the tiny vocab table, never a
         # global sort), re-run per consumer at vocab cost
-        .localCheckpoint(eager=True)
-        .orderBy(F.desc("freq"), F.asc("tok"))
-        .limit(1000)
     )
+    top = vocab.orderBy(F.desc("freq"), F.asc("tok")).limit(1000)
     b = top.select(F.col("tok").alias("b_tok"), F.col("freq").alias("b_freq"))
     ranked = (
         top.join(
@@ -2783,11 +2783,11 @@ def feature_mi_documents(spark, sf_dir):
         ).alias("f"),
         "y",
     ).select(F.col("f.feature").alias("feature"), F.col("f.bin").alias("bin"), "y")
-    cells = melted.groupBy("feature", "bin", "y").agg(
+    cells = materialize(melted.groupBy("feature", "bin", "y").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     # ≤60-cell contingency table consumed by four branches (row/col
     # margins, total, terms) — one regex-heavy corpus pass, not four (§8)
-    ).localCheckpoint(eager=True)
+    ))
     mb = cells.groupBy("feature", "bin").agg(F.sum("c").cast("long").alias("rb"))
     my = cells.groupBy("feature", "y").agg(F.sum("c").cast("long").alias("ry"))
     # every document lands in exactly one len_bin cell (NULL bins group
@@ -2900,9 +2900,9 @@ def conformal_interval_events(spark, sf_dir):
     # (same values, same multiplicities), so the residual side of the
     # query reads the fact rows once instead of twice — and the shared
     # aggregate exchange is planned once (ReusedExchange)
-    rc = r.groupBy("event_type", "is_cal", "r_q").agg(
+    rc = materialize(r.groupBy("event_type", "is_cal", "r_q").agg(
         F.count(F.lit(1)).cast("long").alias("_rc")
-    ).localCheckpoint(eager=True)
+    ))
     # n_cal per type, re-derived from the residual count table: rc was
     # built from ev JOIN m (NULL types already dropped by the equi-join),
     # and summing calibration multiplicities — NULL-residual groups
@@ -2919,13 +2919,13 @@ def conformal_interval_events(spark, sf_dir):
     # join: pin it once, at ONE partition — round 10 materialized this
     # (and m, and the machinery's internal totals) at 32 partitions,
     # billing a full task wave per barrier for ~empty partitions.
-    qh = grouped_exact_percentiles(
+    qh = materialize(grouped_exact_percentiles(
         rc.filter("is_cal"),
         ["event_type"],
         "r_q",
         {"q_hat": 0.9},
         weight_col="_rc",
-    ).coalesce(1).localCheckpoint(eager=True)
+    ).coalesce(1))
     cov = (
         rc.filter(~F.col("is_cal"))
         .join(F.broadcast(qh), "event_type")
@@ -3210,7 +3210,7 @@ def ccf_click_purchase_daily(spark, sf_dir):
     the closing correlation is one IEEE expression shared with the
     oracle. The series is calendar-bounded per type."""
     t = load_tables(spark, sf_dir)
-    daily = (
+    daily = materialize(
         spread(t["events"], spark)
         .filter(F.col("event_type").isin("click", "purchase"))
         .groupBy("event_type", F.col("ts").cast("date").alias("day"))
@@ -3222,7 +3222,6 @@ def ccf_click_purchase_daily(spark, sf_dir):
         )
         # days-bounded series consumed by both the click and purchase
         # branches — materialize once instead of two fact passes (§8)
-        .localCheckpoint(eager=True)
     )
     c = daily.filter(F.col("event_type") == "click").select("day", F.col("m").alias("x"))
     p = daily.filter(F.col("event_type") == "purchase").select(
@@ -3553,8 +3552,7 @@ def record_highs_daily_events(spark, sf_dir):
     on event_type with a date/value theta residual, NOT a running-max
     window, so nothing serializes; per-type daily series are
     calendar-bounded."""
-    t = load_tables(spark, sf_dir)
-    daily = _daily_type_mean(spark, sf_dir).localCheckpoint(eager=True)
+    daily = _daily_type_mean(spark, sf_dir)
     b = daily.select(
         F.col("event_type").alias("b_type"),
         F.col("day").alias("b_day"),
@@ -3637,12 +3635,7 @@ def haar_energy_daily_events(spark, sf_dir):
     aggregates), never a window or sort; incomplete trailing pairs drop
     (cnt=2 guard) identically in both engines. Per-pair energies are
     nano-quantized before the order-free sums."""
-    t = load_tables(spark, sf_dir)
-    daily = _daily_type_mean(spark, sf_dir).localCheckpoint(eager=True)
-    t0 = daily.groupBy("event_type").agg(F.min("day").alias("day0"))
-    d0 = daily.join(F.broadcast(t0), "event_type").select(
-        "event_type", F.datediff("day", "day0").alias("i"), "m"
-    )
+    d0 = _day_index(_daily_type_mean(spark, sf_dir))
 
     def halve(df, idx, val):
         even = F.max(F.when(F.col(idx) % 2 == 0, F.col(val)))
@@ -3658,7 +3651,7 @@ def haar_energy_daily_events(spark, sf_dir):
             "diff", "avg2", "cnt",
         )
 
-    l1 = halve(d0, "i", "m")
+    l1 = halve(d0, "t", "m")
     l2 = halve(l1.filter("cnt = 2"), "j", "avg2")
     l3 = halve(l2.filter("cnt = 2"), "j", "avg2")
     stacked = (
@@ -3764,12 +3757,7 @@ def newey_west_trend_daily(spark, sf_dir):
     nano-quantized before the order-free sums; slope/SE are single IEEE
     expressions over the exact moments, shared with the oracle.
     Bartlett long-run variance: γ0 + 2·Σ(1 − l/4)·γl."""
-    t = load_tables(spark, sf_dir)
-    daily = _daily_type_mean(spark, sf_dir).localCheckpoint(eager=True)
-    t0 = daily.groupBy("event_type").agg(F.min("day").alias("day0"))
-    d0 = daily.join(F.broadcast(t0), "event_type").select(
-        "event_type", F.datediff("day", "day0").alias("t"), "m"
-    )
+    d0 = _day_index(_daily_type_mean(spark, sf_dir))
     mom = d0.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("t").cast("long").alias("sx"),
@@ -3933,12 +3921,7 @@ def hurst_rs_daily_events(spark, sf_dir):
     block's R/S is computed over its day-ORDERED in-row array with the
     shared sequential folds, quantized per block; H is the ln-ln OLS
     slope of mean R/S on w (the zipf/heaps discipline)."""
-    t = load_tables(spark, sf_dir)
-    daily = _daily_type_mean(spark, sf_dir).localCheckpoint(eager=True)
-    t0 = daily.groupBy("event_type").agg(F.min("day").alias("day0"))
-    d0 = daily.join(F.broadcast(t0), "event_type").select(
-        "event_type", F.datediff("day", "day0").alias("t"), "m"
-    )
+    d0 = _day_index(_daily_type_mean(spark, sf_dir))
     blocks = (
         d0.select(
             "event_type", "t", "m",
@@ -4044,12 +4027,7 @@ def weekly_spectral_power_events(spark, sf_dir):
     map-combined groupBy per type: the frequency-domain seasonality
     check without an FFT (one bin is all the gate needs). Per-row
     cos/sin terms nano-quantized before the order-free sums."""
-    t = load_tables(spark, sf_dir)
-    daily = _daily_type_mean(spark, sf_dir).localCheckpoint(eager=True)
-    t0 = daily.groupBy("event_type").agg(F.min("day").alias("day0"))
-    d0 = daily.join(F.broadcast(t0), "event_type").select(
-        "event_type", F.datediff("day", "day0").alias("t"), "m"
-    )
+    d0 = _day_index(_daily_type_mean(spark, sf_dir))
     ang = F.lit(2.0) * F.lit(math.pi) * F.col("t") / F.lit(7.0)
     terms = d0.select(
         "event_type",
@@ -4137,8 +4115,7 @@ def pacf_daily_events(spark, sf_dir):
     algebra over ρ1..ρ3, written as one identical expression tree in
     both engines. φ22=(ρ2−ρ1²)/(1−ρ1²); φ21=ρ1−φ22ρ1;
     φ33=(ρ3−φ21ρ2−φ22ρ1)/(1−φ21ρ1−φ22ρ2)."""
-    t = load_tables(spark, sf_dir)
-    daily = _daily_type_mean(spark, sf_dir).localCheckpoint(eager=True)
+    daily = _daily_type_mean(spark, sf_dir)
     t0 = daily.groupBy("event_type").agg(F.min("day").alias("day0"))
     mu = daily.groupBy("event_type").agg(
         (
@@ -4251,12 +4228,7 @@ def rolling_origin_backtest_daily(spark, sf_dir):
     time (random k-fold leaks the future). Origins are a literal spine
     joined against the day index (the heaps-checkpoint pattern); no
     windows, per-day absolute errors quantized before the sums."""
-    t = load_tables(spark, sf_dir)
-    daily = _daily_type_mean(spark, sf_dir).localCheckpoint(eager=True)
-    t0 = daily.groupBy("event_type").agg(F.min("day").alias("day0"))
-    d0 = daily.join(F.broadcast(t0), "event_type").select(
-        "event_type", F.datediff("day", "day0").alias("t"), "m"
-    )
+    d0 = _day_index(_daily_type_mean(spark, sf_dir))
     origins = spark.createDataFrame([(c,) for c in (14, 17, 20, 23, 26)], "c int")
     train = (
         d0.crossJoin(F.broadcast(origins))
@@ -4418,9 +4390,9 @@ def qq_distance_view_click(spark, sf_dir):
     # where the built-in percentile's per-group buffer grows linearly
     # the 2-row decile table is consumed twice (view side, click side):
     # eager-checkpoint it so the rank/bracket machinery runs once
-    dec = grouped_exact_percentiles(
+    dec = materialize(grouped_exact_percentiles(
         q, ["event_type"], "v_q", {f"d{p}": p / 10.0 for p in range(1, 10)}
-    ).localCheckpoint(eager=True)
+    ))
     a = dec.filter(F.col("event_type") == "view").drop("event_type")
     bcols = [F.col(f"d{p}").alias(f"b{p}") for p in range(1, 10)]
     b = dec.filter(F.col("event_type") == "click").select(*bcols)

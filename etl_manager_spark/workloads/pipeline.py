@@ -19,6 +19,7 @@ from etl_manager_spark.operators import similarity as S
 from etl_manager_spark.operators import text as X
 from etl_manager_spark.operators.asof import asof_join
 from etl_manager_spark.functions.exact import lit_double_array, lit_double_matrix
+from etl_manager_spark.operators.materialize import materialize
 from etl_manager_spark.workloads import ann_oracle, workload
 from etl_manager_spark.workloads.scratch import scratch_dir, stored
 from etl_manager_spark.workloads.tables import load_tables, spread
@@ -648,8 +649,8 @@ def _with_recall(approx, exact, keys):
     execution in the LSH/IVF top-k queries. One materialization each
     halves the index work and leaves the final plan a pure
     checkpoint-read join."""
-    approx = approx.localCheckpoint(eager=True)
-    ex = exact.select(*keys).localCheckpoint(eager=True)
+    approx = materialize(approx)
+    ex = materialize(exact.select(*keys))
     overlap = approx.join(ex, on=keys, how="left_semi").agg(
         F.count(F.lit(1)).alias("_n_overlap")
     )
@@ -1325,14 +1326,13 @@ def curation_pipeline_documents(spark, sf_dir):
     wc = Window.partitionBy("doc_id").orderBy(
         F.asc_nulls_first("text"), F.asc_nulls_first("lang")
     )
-    canon = (
+    canon = materialize(
         t["documents"]
         .select("doc_id", "text", "lang")
         .withColumn("_rn", F.row_number().over(wc))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
         # two consumers (dedup agg + survivor semi-join) read this
-        .localCheckpoint(eager=True)
     )
     survivors = D.exact_dedup(canon, subset=["text"], id_col="doc_id")
     docs = canon.join(
@@ -2351,13 +2351,12 @@ def pretrain_pipeline_documents(spark, sf_dir):
     # id canonicalization first, as in curation_pipeline_documents;
     # checkpointed because five later stages consume it - unbroken
     # lineage would re-run the canon window once per consumer
-    docs = (
+    docs = materialize(
         t["documents"]
         .select("doc_id", "text", "lang")
         .withColumn("_rn", F.row_number().over(wc))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .localCheckpoint(eager=True)
     )
     flags = X.gopher_quality_flags_vectorized(spread(docs, spark))
     kept = docs.join(
@@ -2936,7 +2935,7 @@ def similarity_mmr_diversified(spark, sf_dir):
         F.col("embedding").alias("_cv"),
         S.l2_norm(F.col("embedding")).alias("_cn"),
     )
-    candv = cands.join(cvec, on="neighbor_id").select(
+    candv = materialize(cands.join(cvec, on="neighbor_id").select(
         "query_id",
         F.col("neighbor_id").alias("a_nid"),
         F.col("cosine_sim").alias("a_simq"),
@@ -2945,7 +2944,7 @@ def similarity_mmr_diversified(spark, sf_dir):
     # §8: both sides of the shortlist pair join read this — shortlist-
     # bounded (|queries|·k rows) by construction; lazily the exact
     # top-k scorer re-executed per side (6 embeddings scans)
-    ).localCheckpoint(eager=True)
+    ))
     b = candv.select(
         F.col("query_id").alias("_bq"),
         F.col("a_nid").alias("b_nid"),
@@ -3227,9 +3226,8 @@ def gdpr_cascade_delete_audit(spark, sf_dir):
     scans total: customer×2 (subject slice, conditional agg), orders×2
     (deleted-key materialization, flag agg), lineitem×1."""
     t = load_tables(spark, sf_dir)
-    forget = (
+    forget = materialize(
         t["customer"].filter(F.col("c_custkey") % 101 == 0).select("c_custkey")
-        .localCheckpoint(eager=True)
     )
     # kept = total − deleted reproduces the anti-join exactly: a NULL or
     # non-multiple key never matched the semi predicate, so it was kept
@@ -3250,10 +3248,7 @@ def gdpr_cascade_delete_audit(spark, sf_dir):
         F.col("o_custkey") == F.col("c_custkey"),
         "left",
     )
-    del_orders = (
-        orders_flagged.filter(omatch).select("o_orderkey")
-        .localCheckpoint(eager=True)
-    )
+    del_orders = materialize(orders_flagged.filter(omatch).select("o_orderkey"))
     ords = orders_flagged.agg(
         F.count(F.when(omatch, 1)).alias("orders_deleted"),
         F.count(F.when(~omatch, 1)).alias("orders_kept"),
@@ -3579,7 +3574,7 @@ def intrinsic_dim_twonn_embeddings(spark, sf_dir):
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    pairs = (
+    pairs = materialize(
         e.join(F.broadcast(b), F.col("vec_id") != F.col("j"))
         .select(F.col("vec_id").alias("i"), dsq.alias("dsq"))
         # §8: the d1 pass and the d2 pass both consume the pair
@@ -3587,7 +3582,6 @@ def intrinsic_dim_twonn_embeddings(spark, sf_dir):
         # (4 embeddings scans in the round-10 audit). The materialized
         # rows are (i, dsq) doubles over the vec_id<500 sample contract —
         # bounded by construction, no vectors
-        .localCheckpoint(eager=True)
     )
     d1 = (
         pairs.groupBy("i")

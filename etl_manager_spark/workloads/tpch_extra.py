@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_manager_spark.functions.exact import dec, dec_sum
+from etl_manager_spark.operators.materialize import materialize
 from etl_manager_spark.workloads import workload
 from etl_manager_spark.workloads.tables import load_tables
 
@@ -126,7 +127,7 @@ def q15_top_supplier(spark, sf_dir):
     the equality comparison is portable across engines; supplier side
     broadcasts."""
     t = load_tables(spark, sf_dir)
-    revenue = (
+    revenue = materialize(
         t["lineitem"]
         .filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
@@ -134,7 +135,6 @@ def q15_top_supplier(spark, sf_dir):
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(_REVENUE_SPARK().alias("total_revenue"))
-        .localCheckpoint(eager=True)
     )
     max_rev = revenue.groupBy().agg(F.max("total_revenue").alias("_max_rev"))
     best = revenue.join(
@@ -499,7 +499,7 @@ def q11_important_part_value(spark, sf_dir):
     both the per-part values and the 0.001·total threshold bitwise
     identical across engines (one IEEE multiply of identical doubles)."""
     t = load_tables(spark, sf_dir)
-    nat_value = (
+    nat_value = materialize(
         t["lineitem"]
         .join(
             F.broadcast(t["supplier"].filter(F.col("s_nationkey") == 7)),
@@ -507,7 +507,6 @@ def q11_important_part_value(spark, sf_dir):
         )
         .groupBy("l_partkey")
         .agg(F.sum(dec("l_extendedprice") * dec("l_quantity")).alias("value_dec"))
-        .localCheckpoint(eager=True)
     )
     total = nat_value.agg(
         F.sum("value_dec").cast("double").alias("_total")

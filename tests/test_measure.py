@@ -1,5 +1,6 @@
 """tools/measure.py: two measurements of one query give identical
-counters, and the plan counters see the scans a query makes."""
+counters, the plan counters see the scans a query makes, and the
+eager barriers are counted."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import pytest
 from tools.measure import measure
 
 COUNTS = (
-    "jobs", "stages", "tasks",
+    "jobs", "stages", "tasks", "barrier_jobs",
     "parquet_scans", "existing_rdd_scans", "exchanges", "reused_exchanges",
 )
 
@@ -24,8 +25,10 @@ def test_measure_counters_repeat(spark, sf_dir):
             k: second[name][k] for k in COUNTS
         }, name
     assert first["q6_revenue_change"]["parquet_scans"] == {"lineitem": 1}
+    assert first["q6_revenue_change"]["barrier_jobs"] == 0
     # k-core peels over checkpointed edge sets
     assert first["kcore_neardup_graph"]["existing_rdd_scans"] > 0
+    assert first["kcore_neardup_graph"]["barrier_jobs"] > 0
 
 
 def test_measure_rejects_unknown_name_before_spark(sf_dir):

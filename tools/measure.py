@@ -16,10 +16,13 @@ Each record holds:
   ungrouped jobs started in that run, stages are summed per job, and
   tasks are Spark's own per-job count (the tasks of the stages a job
   still had to compute when it started) summed over the jobs;
-* ``parquet_scans`` (per table), ``existing_rdd_scans`` (checkpoint
-  reads), ``exchanges``, ``reused_exchanges`` — counted in that run's
-  formatted physical plan. Streaming queries have no batch plan and
-  record ``"skipped": "streaming"`` instead.
+* ``barrier_jobs`` — those of the run's jobs that are eager barriers:
+  the checkpoint jobs of ``operators/materialize.py``, whose job
+  description starts with ``"materialize "``;
+* ``parquet_scans`` (per table), ``existing_rdd_scans`` (reads of
+  materialized frames), ``exchanges``, ``reused_exchanges`` — counted in
+  that run's formatted physical plan. Streaming queries have no batch
+  plan and record ``"skipped": "streaming"`` instead.
 
 Counts are properties of the committed code, not of the box, so
 before/after pairs of them are drift-proof evidence; walls ride along.
@@ -99,10 +102,15 @@ def _counted_run(spark, entry, sf_dir):
         for j in tracker.getJobIdsForGroup(None)
         if j > before
     ]
+    descriptions = [jd.description() for jd in jobs]
     rec = {
         "jobs": len(jobs),
         "stages": sum(jd.stageIds().size() for jd in jobs),
         "tasks": sum(jd.numTasks() for jd in jobs),
+        "barrier_jobs": sum(
+            d.isDefined() and d.get().startswith("materialize ")
+            for d in descriptions
+        ),
     }
     return rec, df
 
