@@ -46,6 +46,7 @@ def _staleness_order(names) -> list[str]:
     are regenerated from the CORRECTNESS_r*.json files by
     tools/regen_driver_green.py — never hand-kept."""
     import json
+    import warnings
 
     wdir = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
@@ -57,7 +58,15 @@ def _staleness_order(names) -> list[str]:
         try:
             with open(os.path.join(wdir, fname)) as fh:
                 return json.load(fh)
-        except Exception:  # noqa: BLE001 - no ledger → empty
+        except (OSError, ValueError) as exc:
+            # A broken ledger must not break queries()/oracle_sql(), but
+            # silent degradation would scramble the verification order —
+            # make the fallback loud.
+            warnings.warn(
+                f"{fname} unusable ({exc!r}); treating every query as "
+                "never-verified — regenerate with tools/regen_driver_green.py",
+                stacklevel=2,
+            )
             return {}
 
     green = _load("driver_green.json")

@@ -10,9 +10,10 @@ Usage::
         [--sf-dir /root/testdata/sf0.01]
 
 ``verify`` runs the Spark query AND its DuckDB oracle side-by-side on the
-same parquet dir and compares them with ``tools/parity_lib.compare_results``,
-the comparison the oracle-parity tests use (result types, column names,
-row counts, values). It needs a source checkout. Exit code 1 on mismatch.
+same parquet dir through ``tools/parity_lib.check_parity``, the check the
+oracle-parity tests use (result types, column names, row counts, values);
+data-trained oracles train on that same dir, so any ``--sf-dir`` works.
+It needs a source checkout. Exit code 1 on a mismatch or an error.
 """
 
 from __future__ import annotations
@@ -87,44 +88,31 @@ def cmd_oracle(args) -> int:
 
 
 def cmd_verify(args) -> int:
-    import duckdb
-
-    from etl_manager_spark.workloads.tables import TABLE_NAMES
-    from tools.parity_lib import compare_results
+    from tools.parity_lib import check_parity
 
     reg = _registry()
     w = reg.get(args.query)
     if w is None:
         print(f"unknown query {args.query!r}", file=sys.stderr)
         return 2
-    if w.oracle is None:
+    spark = _session(args.cpus)
+    if w.oracle_spec is None:
         print(f"-- {args.query} is rows-only; running Spark side only",
               file=sys.stderr)
-        spark = _session(args.cpus)
         n = w.fn(spark, args.sf_dir).count()
         print(f"OK rows={n} (no oracle compare)")
         return 0
-    spark = _session(args.cpus)
-    sdf = w.fn(spark, args.sf_dir)
-    rows = [tuple(r) for r in sdf.collect()]
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
-    rel = con.sql(w.oracle)
-    problems = compare_results(
-        args.query, sdf.columns, rows, sdf.dtypes,
-        rel.columns, rel.fetchall(), rel.types,
-    )
-    if problems:
-        print(f"MISMATCH {args.query}:")
-        for p in problems:
-            print(f"  {p}")
-        return 1
-    print(f"OK {args.query}: {len(rows)} rows match the DuckDB oracle")
-    return 0
+    rec = check_parity(spark, args.query, w, args.sf_dir)
+    if rec["status"] == "parity":
+        print(f"OK {args.query}: {rec['rows']} rows match the DuckDB oracle")
+        return 0
+    print(f"{rec['status'].upper()} {args.query}:")
+    for p in rec.get("problems", []):
+        print(f"  {p}")
+    for side in ("spark", "duck"):
+        if side in rec:
+            print(f"  {side}: {rec[side]}")
+    return 1
 
 
 def main(argv=None) -> int:

@@ -12,6 +12,8 @@ identical doubles.
 
 from __future__ import annotations
 
+import functools
+import os
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -22,84 +24,52 @@ from pyspark.sql import DataFrame, SparkSession
 class Workload:
     """One catalog entry: a Spark query + optional DuckDB oracle SQL.
 
-    ``oracle_spec`` is either the SQL string itself or a zero-arg factory
-    producing it. Factories exist for oracles that embed data-derived
-    literals (e.g. the IVF centroids, trained from the oracle-scale
-    parquet) — building those at import time would add I/O to every
-    import, so they run on first ``.oracle`` access and memoize."""
+    ``oracle_spec`` is either the SQL string itself or a factory
+    ``(sf_dir) -> str``. Factories exist for oracles that embed
+    data-derived literals (e.g. the IVF centroids, trained from the same
+    parquet dir the Spark side reads) — building those at import time
+    would add I/O to every import, so they run on first access and
+    memoize per data dir."""
 
     fn: Callable[[SparkSession, str], DataFrame]
     # None → non-SQL-expressible, rows-only check
-    oracle_spec: Optional[str | Callable[[], str]]
+    oracle_spec: Optional[str | Callable[[str], str]]
     category: str
+
+    def oracle_for(self, sf_dir: str) -> Optional[str]:
+        """The oracle SQL to check a Spark run over ``sf_dir`` against."""
+        if callable(self.oracle_spec):
+            return self.oracle_spec(sf_dir)
+        return self.oracle_spec
 
     @property
     def oracle(self) -> Optional[str]:
-        return self.oracle_spec() if callable(self.oracle_spec) else self.oracle_spec
+        """The oracle at the oracle scale: $SPARK_GRAFT_ORACLE_SF_DIR,
+        default sf0.01 — the dir ``oracle_sql()`` is checked against."""
+        return self.oracle_for(
+            os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+        )
 
 
 REGISTRY: dict[str, Workload] = {}
 
 
-def workload(name: str, oracle: Optional[str | Callable[[], str]], category: str):
+def workload(name: str, oracle: Optional[str | Callable[[str], str]], category: str):
     """Decorator registering a (spark, sf_dir) -> DataFrame query."""
 
     def deco(fn):
-        import functools
-
-        spec = functools.lru_cache(maxsize=1)(oracle) if callable(oracle) else oracle
+        # one entry per data dir checked against: a handful per process
+        spec = functools.lru_cache(maxsize=None)(oracle) if callable(oracle) else oracle
         REGISTRY[name] = Workload(fn=fn, oracle_spec=spec, category=category)
         return fn
 
     return deco
 
 
-# The driver-green ledger is GENERATED from the CORRECTNESS_r*.json files
-# by ``tools/regen_driver_green.py`` (never hand-edited): query name →
-# last round whose driver row had hash_match == True. The driver's
-# per-round correctness gate checks a bounded prefix of the registry, so
-# load_registry() orders entries to maximize signal each round:
-# oracle-bearing queries without a green row yet come first, rows-only
-# (no-oracle) entries next, and already-verified queries last —
-# stalest verification first, so fixture/code drift is re-caught soonest.
-def _load_driver_green() -> dict[str, int]:
-    import json
-    import os
-    import warnings
-
-    path = os.path.join(os.path.dirname(__file__), "driver_green.json")
-    try:
-        with open(path) as f:
-            data = json.load(f)
-        return {str(k): int(v) for k, v in data.items()}
-    except (OSError, ValueError, TypeError, AttributeError) as exc:
-        # A broken ledger must not break the catalog import, but silent
-        # degradation would scramble the driver's verification ordering —
-        # make the fallback loud.
-        warnings.warn(
-            f"driver_green.json unusable ({exc!r}); treating every query "
-            "as never-verified — regenerate with tools/regen_driver_green.py",
-            stacklevel=2,
-        )
-        return {}
-
-
-_DRIVER_GREEN: dict[str, int] = _load_driver_green()
-
-
-def _priority(item: tuple[str, Workload]) -> tuple[int, int]:
-    name, wl = item
-    if wl.oracle_spec is not None and name not in _DRIVER_GREEN:
-        return (0, 0)  # strongest new signal: full oracle check, no green row
-    if wl.oracle_spec is None:
-        return (1, 0)  # rows-only check
-    return (2, _DRIVER_GREEN[name])  # verified: stalest round first
-
-
 def load_registry() -> dict[str, Workload]:
     """Import all workload modules (side-effect: fills REGISTRY) and return
-    the catalog ordered for the driver's bounded correctness prefix (see
-    ``_DRIVER_GREEN``). Sort is stable → insertion order within a tier."""
+    the catalog in registration order. The verification order of
+    ``queries()`` is ``__spark_entry__._staleness_order``."""
     from etl_manager_spark.workloads import (  # noqa: F401
         analytics,
         audit,
@@ -113,4 +83,4 @@ def load_registry() -> dict[str, Workload]:
         tpch_extra,
     )
 
-    return dict(sorted(REGISTRY.items(), key=_priority))
+    return dict(REGISTRY)

@@ -14,25 +14,15 @@ sequential-across-dims accumulation — bitwise-identical to DuckDB's
   generation, exact rescoring, top-k ranking, and the
   recall-vs-bruteforce ratio are all recomputed independently in SQL.
 
-The IVF factory re-trains the centroids from the oracle-scale parquet
-(``SPARK_GRAFT_ORACLE_SF_DIR``, default the driver's sf0.01) with the
-same shared trainer the Spark path uses, so the literals it embeds are
-bit-for-bit the closure constants the Spark plan carries at that scale.
-Factories are memoized by the registry (see ``workloads.Workload``).
-
-CONTRACT: the oracle is only comparable to a Spark run invoked with the
-SAME sf_dir as ``SPARK_GRAFT_ORACLE_SF_DIR`` — the Spark side trains
-its index from the sf_dir it is called with, while these factories pin
-the env-configured oracle scale (the driver's correctness gate always
-compares at its oracle SF, so the two agree there by construction). A
-harness comparing at a different SF must export the env var BEFORE the
-first ``.oracle`` access: the registry memoization freezes the first
-result for the process lifetime.
+Every factory takes the data dir its oracle is checked against. The
+trained ones (IVF centroids, PCA, PQ and ADC codebooks) re-train from
+that dir's embeddings parquet with the same shared trainer the Spark path
+uses, so the literals they embed are bit-for-bit the closure constants
+the Spark plan carries when it runs over the same dir. Callers reach
+them through ``Workload.oracle_for(sf_dir)``, which memoizes per dir.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 
@@ -58,6 +48,21 @@ def _lit(vals) -> str:
     """Exact-round-trip DOUBLE[] literal (scientific notation parses as
     DOUBLE directly, never through DECIMAL)."""
     return "[" + ",".join("%.17e" % float(x) for x in vals) + "]"
+
+
+def _embedding_rows(sf_dir: str, tail: str = "") -> list:
+    """``(vec_id, DOUBLE[] embedding)`` rows of ``sf_dir``'s embeddings
+    parquet (float32 widened exactly — the trainers' float64 inputs);
+    ``tail`` appends a WHERE / ORDER BY clause."""
+    import duckdb
+
+    con = duckdb.connect()
+    rows = con.execute(
+        "SELECT vec_id, CAST(embedding AS DOUBLE[]) FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet'){tail}"
+    ).fetchall()
+    con.close()
+    return rows
 
 
 def _cos(a: str, b: str) -> str:
@@ -120,7 +125,7 @@ _RECALL_TAIL = """
     FROM approx a CROSS JOIN rec r"""
 
 
-def lsh_topk_oracle() -> str:
+def lsh_topk_oracle(sf_dir: str) -> str:
     """similarity_topk_lsh: bucket in SQL from the same plane literals,
     candidate = collision in ANY table, exact rescoring, top-k, recall."""
     return f"""
@@ -144,29 +149,22 @@ def lsh_topk_oracle() -> str:
     ),{_EXACT_TOPK},{_RECALL_TAIL}"""
 
 
-def _ivf_centroids() -> list[list[float]]:
-    """Re-train the IVF centroids from the oracle-scale parquet with the
-    shared deterministic trainer — identical float64 inputs (float32
-    parquet widened exactly) and identical code path to the Spark query's
-    driver-side training, so the centroid literals match bit-for-bit."""
-    import duckdb
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT vec_id, CAST(embedding AS DOUBLE[]) FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    ).fetchall()
-    con.close()
-    return _sorted_sample_centroids(rows, IVF_LISTS, IVF_TRAIN_SAMPLE)
+def _ivf_centroids(sf_dir: str) -> list[list[float]]:
+    """Re-train the IVF centroids from ``sf_dir`` with the shared
+    deterministic trainer — identical float64 inputs and identical code
+    path to the Spark query's driver-side training, so the centroid
+    literals match bit-for-bit."""
+    return _sorted_sample_centroids(
+        _embedding_rows(sf_dir), IVF_LISTS, IVF_TRAIN_SAMPLE
+    )
 
 
-def ivf_topk_oracle() -> str:
+def ivf_topk_oracle(sf_dir: str) -> str:
     """similarity_topk_ivf: embed the (re-trained) centroid literals,
     assign every corpus vector to its argmax list, probe the nprobe
     nearest lists per query, exact rescoring, top-k, recall."""
     cent_rows = ", ".join(
-        f"({j + 1}, {_lit(c)})" for j, c in enumerate(_ivf_centroids())
+        f"({j + 1}, {_lit(c)})" for j, c in enumerate(_ivf_centroids(sf_dir))
     )
     return f"""
     WITH e AS (SELECT DISTINCT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -211,12 +209,12 @@ def ivf_topk_oracle() -> str:
     ),{_EXACT_TOPK},{_RECALL_TAIL}"""
 
 
-def semdedup_oracle() -> str:
+def semdedup_oracle(sf_dir: str) -> str:
     """semdedup_embeddings: embed the (re-trained) centroid literals,
     assign every vector to its argmax cluster, enumerate within-cluster
     pairs (id_a < id_b), exact cosine gate at the near-dup threshold."""
     cent_rows = ", ".join(
-        f"({j + 1}, {_lit(c)})" for j, c in enumerate(_ivf_centroids())
+        f"({j + 1}, {_lit(c)})" for j, c in enumerate(_ivf_centroids(sf_dir))
     )
     return f"""
     WITH e AS (SELECT DISTINCT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -240,7 +238,7 @@ def semdedup_oracle() -> str:
     WHERE {_cos('a.v', 'b.v')} >= {NEARDUP_THRESHOLD}"""
 
 
-def lsh_neardup_oracle() -> str:
+def lsh_neardup_oracle(sf_dir: str) -> str:
     """dedup_embedding_cosine_lsh: bucket-join candidate pairs (id_a <
     id_b, collision in ANY table), exact cosine gate, recall vs the exact
     pair set over the 50% md5 hash-threshold subsample."""
@@ -279,31 +277,24 @@ PCA_COMPONENTS = 2
 PCA_TRAIN_SAMPLE = 1024
 
 
-def _pca_params() -> tuple[list[float], list[list[float]]]:
-    """Re-train the PCA mean/components from the oracle-scale parquet
-    with the shared deterministic trainer (same contract as
-    ``_ivf_centroids``) — identical float64 inputs and identical numpy
-    code path to the Spark query's driver-side training."""
-    import duckdb
-
+def _pca_params(sf_dir: str) -> tuple[list[float], list[list[float]]]:
+    """Re-train the PCA mean/components from ``sf_dir`` with the shared
+    deterministic trainer (same contract as ``_ivf_centroids``) —
+    identical float64 inputs and identical numpy code path to the Spark
+    query's driver-side training."""
     from etl_manager_spark.operators.similarity import _sorted_sample_pca
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT vec_id, CAST(embedding AS DOUBLE[]) FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    ).fetchall()
-    con.close()
-    return _sorted_sample_pca(rows, PCA_COMPONENTS, PCA_TRAIN_SAMPLE)
+    return _sorted_sample_pca(
+        _embedding_rows(sf_dir), PCA_COMPONENTS, PCA_TRAIN_SAMPLE
+    )
 
 
-def pca_project_oracle() -> str:
+def pca_project_oracle(sf_dir: str) -> str:
     """pca_project_embeddings: embed the (re-trained) mean/component
     literals and render the SAME left-associative per-dimension sum
     chain the Spark projection evaluates — bitwise-equal projections,
     then the shared nano-quantization."""
-    mean, comps = _pca_params()
+    mean, comps = _pca_params(sf_dir)
 
     def chain(comp: list[float]) -> str:
         return " + ".join(
@@ -329,29 +320,22 @@ PQ_CENTROIDS = 8
 PQ_TRAIN_SAMPLE = 1024
 
 
-def _pq_codebooks() -> list[list[list[float]]]:
-    """Re-train the PQ codebooks from the oracle-scale parquet with the
-    shared deterministic trainer (same contract as ``_ivf_centroids``)."""
-    import duckdb
-
+def _pq_codebooks(sf_dir: str) -> list[list[list[float]]]:
+    """Re-train the PQ codebooks from ``sf_dir`` with the shared
+    deterministic trainer (same contract as ``_ivf_centroids``)."""
     from etl_manager_spark.operators.similarity import _sorted_sample_pq
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT vec_id, CAST(embedding AS DOUBLE[]) FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    ).fetchall()
-    con.close()
-    return _sorted_sample_pq(rows, PQ_SUBSPACES, PQ_CENTROIDS, PQ_TRAIN_SAMPLE)
+    return _sorted_sample_pq(
+        _embedding_rows(sf_dir), PQ_SUBSPACES, PQ_CENTROIDS, PQ_TRAIN_SAMPLE
+    )
 
 
-def pq_encode_oracle() -> str:
+def pq_encode_oracle(sf_dir: str) -> str:
     """pq_encode_embeddings: embed the codebook literals and replay the
     per-subspace squared-L2 argmin (struct sort = (dist, index) — the
     same tie-break as Spark's array_min over structs) and the
     subspace-ordered reconstruction-error sum."""
-    books = _pq_codebooks()
+    books = _pq_codebooks(sf_dir)
     d = len(books[0][0])
 
     def dist2(m: int, c: list[float]) -> str:
@@ -395,23 +379,14 @@ ADC_CENTROIDS = 32
 ADC_RERANK = 50
 
 
-def _adc_codebooks() -> list[list[list[float]]]:
+def _adc_codebooks(sf_dir: str) -> list[list[list[float]]]:
     """ADC codebooks (finer than the compression demo's 8x8: 16
     subspaces x 32 codewords — tuned so the shortlist+rerank search
     reaches recall 1.0 on the weak-neighbor synthetic embeddings)."""
-    import duckdb
-
     from etl_manager_spark.operators.similarity import _sorted_sample_pq
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    rows = con.execute(
-        "SELECT vec_id, CAST(embedding AS DOUBLE[]) FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    ).fetchall()
-    con.close()
     return _sorted_sample_pq(
-        rows, ADC_SUBSPACES, ADC_CENTROIDS, PQ_TRAIN_SAMPLE
+        _embedding_rows(sf_dir), ADC_SUBSPACES, ADC_CENTROIDS, PQ_TRAIN_SAMPLE
     )
 
 
@@ -447,27 +422,20 @@ def _pq_scored_cte(books: list[list[list[float]]]) -> str:
     )"""
 
 
-def pq_adc_oracle() -> str:
+def pq_adc_oracle(sf_dir: str) -> str:
     """similarity_topk_pq_adc: replay the code assignment, embed the
     shared ADC lookup-table literals, shortlist the top ADC_RERANK
     candidates per query by the subspace-ordered LUT sum, rerank the
     shortlist by EXACT squared L2, and compute recall against the exact
     top-k — the production PQ search (coarse-but-cheap shortlist, exact
     rescoring of R rows)."""
-    import duckdb
-
     from etl_manager_spark.operators.similarity import pq_adc_luts
 
-    books = _adc_codebooks()
+    books = _adc_codebooks(sf_dir)
     m_count = len(books)
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    con = duckdb.connect()
-    fetched = con.execute(
-        "SELECT vec_id, CAST(embedding AS DOUBLE[]) FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet') "
-        f"WHERE vec_id < {N_QUERIES} ORDER BY vec_id, embedding"
-    ).fetchall()
-    con.close()
+    fetched = _embedding_rows(
+        sf_dir, f" WHERE vec_id < {N_QUERIES} ORDER BY vec_id, embedding"
+    )
     # duplicate query ids collapse to their lexicographically-least
     # vector — the same rule the Spark workload applies before keying
     # its rerank MAP by query_id
@@ -562,7 +530,7 @@ MMR_K = 5
 MMR_LAMBDA = 0.7
 
 
-def mmr_oracle() -> str:
+def mmr_oracle(sf_dir: str) -> str:
     """similarity_mmr_diversified: exact top-20 shortlist per query,
     all pairwise candidate sims, then MMR_K unrolled greedy argmax
     steps of λ·sim(q,c) − (1−λ)·max sim(c, selected) with ties to the

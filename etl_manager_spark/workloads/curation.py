@@ -429,7 +429,7 @@ _BPE_K = 8
 _BPE_VOCAB = 2000
 
 
-def _bpe_learn_oracle() -> str:
+def _bpe_learn_oracle(sf_dir: str) -> str:
     union = "\n      UNION ALL ".join(
         f"SELECT {r + 1} AS merge_rank, lft, rgt, pair_freq FROM b{r}"
         for r in range(_BPE_K)
@@ -459,7 +459,7 @@ def bpe_learn_merges_documents(spark, sf_dir):
     return B.merges_df(spark, merges)
 
 
-def _bpe_encode_oracle() -> str:
+def _bpe_encode_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_bpe_chain_sql(_BPE_K, _BPE_VOCAB)}
     SELECT t.doc_id,
@@ -507,7 +507,7 @@ def _kc_sqdist_sql(emb_a: str, emb_b: str) -> str:
     )
 
 
-def _kcenter_oracle() -> str:
+def _kcenter_oracle(sf_dir: str) -> str:
     parts = [f"""
     WITH e AS MATERIALIZED (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
@@ -592,7 +592,7 @@ def kcenter_coreset_embeddings(spark, sf_dir):
     return spark.createDataFrame(sel, "sel_rank int, vec_id long, dmin_q long")
 
 
-def _bpe_fertility_oracle() -> str:
+def _bpe_fertility_oracle(sf_dir: str) -> str:
     return f"""
     WITH {_bpe_chain_sql(_BPE_K, _BPE_VOCAB)},
     enc AS (

@@ -212,7 +212,7 @@ def dupspan_coverage_documents(spark, sf_dir):
 _KCORE_ROUNDS = 8
 
 
-def _kcore_oracle() -> str:
+def _kcore_oracle(sf_dir: str) -> str:
     rounds = []
     for i in range(_KCORE_ROUNDS):
         # AS MATERIALIZED is load-bearing: each round references the

@@ -1,6 +1,8 @@
 """Engine facade: register → SQL → validate, end-to-end on a tempdir
 warehouse."""
 
+import pathlib
+
 from pyspark.sql import Row
 
 from etl_manager_spark import DatabaseMeta, TableMeta
@@ -135,6 +137,31 @@ def test_cli_verify_rejects_double_for_bigint(monkeypatch, capsys):
     )
     assert main(["verify", "l_diversity_audit_events"]) == 1
     assert "DOUBLE" in capsys.readouterr().out
+
+
+def test_cli_verify_trains_the_oracle_on_its_sf_dir(capsys, sf_dir):
+    # the IVF oracle embeds centroids trained from the data; verify must
+    # train them on the dir it compares at, whatever the oracle scale is
+    # and whether or not that oracle was built earlier in the process
+    from etl_manager_spark.__main__ import main
+
+    args = ["verify", "similarity_topk_ivf", "--sf-dir", sf_dir]
+    assert main(args) == 0, capsys.readouterr().out
+
+
+def test_only_parity_lib_creates_oracle_views():
+    """DuckDB oracle views are made in one place, parity_lib.oracle_db;
+    the statement is split below so this file does not match itself."""
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    owner = repo / "tools" / "parity_lib.py"
+    statement = "CREATE" + " VIEW"
+    offenders = [
+        str(path.relative_to(repo))
+        for top in ("etl_manager_spark", "tools", "tests")
+        for path in sorted((repo / top).rglob("*.py"))
+        if path != owner and statement in path.read_text()
+    ]
+    assert offenders == []
 
 
 def test_update_database_ignores_temp_views(spark, tmp_path):

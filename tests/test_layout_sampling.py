@@ -376,32 +376,24 @@ def test_assign_row_ids_construction_runs_only_the_checkpoint_jobs(spark):
     of ordered_cumsum's eager base localCheckpoint — the former shape
     additionally paid a per-partition-counts ``collect`` (an extra eager
     job wave and a driver barrier) plus a ``createDataFrame`` offsets
-    re-upload per call. Job counts are deltas of the MAX job id (globally
-    monotonic — robust to status-tracker eviction in long suite runs)."""
+    re-upload per call. Jobs are counted by ``plans.counters.counted_jobs``
+    (robust to status-tracker eviction in long suite runs)."""
     from etl_manager_spark.operators.sampling import assign_row_ids
+    from etl_manager_spark.plans.counters import counted_jobs
 
     df = spark.range(10_000).select(
         F.pmod(F.col("id") * 7919, F.lit(10_000)).alias("k")
     )
-    tracker = spark.sparkContext.statusTracker()
-
-    def max_job_id() -> int:
-        ids = tracker.getJobIdsForGroup(None)
-        return max(ids) if ids else -1
-
-    before = max_job_id()
-    (
-        df.repartitionByRange(7, F.asc("k"))
-        .withColumn("_p", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    checkpoint_jobs = max_job_id() - before
-
-    before = max_job_id()
-    out = assign_row_ids(df, order_cols=["k"], n_partitions=7)
-    construction_jobs = max_job_id() - before
-    assert construction_jobs <= checkpoint_jobs, (
-        f"construction ran {construction_jobs} jobs vs {checkpoint_jobs} "
+    with counted_jobs(spark) as checkpoint:
+        (
+            df.repartitionByRange(7, F.asc("k"))
+            .withColumn("_p", F.spark_partition_id())
+            .localCheckpoint(eager=True)
+        )
+    with counted_jobs(spark) as construction:
+        out = assign_row_ids(df, order_cols=["k"], n_partitions=7)
+    assert construction["jobs"] <= checkpoint["jobs"], (
+        f"construction ran {construction['jobs']} jobs vs {checkpoint['jobs']} "
         "for the checkpoint alone — an extra eager action (the old "
         "counts collect?) is back"
     )

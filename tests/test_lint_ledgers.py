@@ -182,14 +182,9 @@ def test_committed_edge_sweeps_have_no_unadjudicated_findings(edge_reports):
 
 def test_oracle_window_order_items_all_qualified():
     from etl_manager_spark.workloads import load_registry
-    from tools.order_nulls import find_unqualified
+    from tools.order_nulls import unqualified_order_items
 
-    bad = {}
-    for name, ent in load_registry().items():
-        if ent.oracle:
-            items = find_unqualified(ent.oracle)
-            if items:
-                bad[name] = items
+    bad = unqualified_order_items(load_registry())
     assert not bad, (
         "oracles with unqualified window ORDER BY items (run "
         f"`python tools/order_nulls.py` to fix): {bad}"

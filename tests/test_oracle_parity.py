@@ -6,12 +6,11 @@ are engineered to be float-deterministic, see functions/exact.py).
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import etl_manager_spark  # noqa: F401 (path setup)
 from etl_manager_spark.workloads import load_registry
-from etl_manager_spark.workloads.tables import TABLE_NAMES
+from tools.parity_lib import check_duck_types, check_parity, oracle_db
 
 REGISTRY = load_registry()
 ORACLE_NAMES = sorted(n for n, wl in REGISTRY.items() if wl.oracle_spec is not None)
@@ -20,58 +19,13 @@ ROWS_ONLY_NAMES = sorted(n for n, wl in REGISTRY.items() if wl.oracle_spec is No
 
 @pytest.fixture(scope="module")
 def duck(sf_dir_oracle):
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir_oracle}/{t}.parquet')"
-        )
-    return con
-
-
-# The compare primitives live in tools/parity_lib.py — ONE implementation
-# shared with the adversarial edge-data sweep (tools/edge_parity.py), so a
-# sweep pass is exactly as strict as this gate.
-from tools.parity_lib import (  # noqa: E402
-    DUCK_TO_SPARK as _DUCK_TO_SPARK,
-    FORBIDDEN_TOKENS as _FORBIDDEN_TOKENS,
-    check_duck_types,
-    normalize,
-    values_equal,
-)
+    return oracle_db(sf_dir_oracle)
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_oracle_parity(name, spark, duck, sf_dir_oracle):
-    wl = REGISTRY[name]
-    sdf = wl.fn(spark, sf_dir_oracle)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    rel = duck.sql(wl.oracle)
-    type_problems = check_duck_types(
-        name, rel.columns, rel.types, sdf.dtypes
-    )
-    assert not type_problems, f"{name}: oracle type mismatch: {type_problems}"
-
-    res = duck.execute(wl.oracle)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
-
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch {spark_cols} vs {duck_cols}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-    )
-
-    s_norm, cols = normalize(spark_rows, spark_cols)
-    d_norm, _ = normalize(duck_rows, duck_cols)
-    mismatches = []
-    for i, (srow, drow) in enumerate(zip(s_norm, d_norm)):
-        for c, (sv, dv) in enumerate(zip(srow, drow)):
-            if not values_equal(sv, dv):
-                mismatches.append((i, cols[c], sv, dv))
-    assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
+def test_oracle_parity(name, spark, sf_dir_oracle):
+    record = check_parity(spark, name, REGISTRY[name], sf_dir_oracle)
+    assert record["status"] == "parity", f"{name}: {record}"
 
 
 def test_type_gate_catches_uncast_sum(duck):
@@ -111,6 +65,32 @@ def test_catalog_type_scan_catches_injection(duck):
     }
     bad = scan_oracle_types(fake)
     assert "bad_q" in bad and "bit_q" in bad and "good_q" not in bad
+
+
+def test_check_parity_records_each_side_and_interrupts_a_slow_oracle(
+    sf_dir_oracle,
+):
+    """Both sides' errors are recorded, not raised, and ``oracle_timeout``
+    interrupts an oracle that would run for minutes."""
+    import time
+    from types import SimpleNamespace
+
+    def spark_side(spark, sf_dir):
+        raise RuntimeError("spark side failed")
+
+    slow = SimpleNamespace(
+        fn=spark_side,
+        oracle_for=lambda sf_dir: (
+            "SELECT COUNT(*) AS n FROM range(100000) a, range(100000) b "
+            "WHERE a.range * b.range % 7 = 3"
+        ),
+    )
+    t0 = time.monotonic()
+    record = check_parity(None, "slow", slow, sf_dir_oracle, oracle_timeout=1)
+    assert time.monotonic() - t0 < 30
+    assert record["status"] == "both_error", record
+    assert "spark side failed" in record["spark"]
+    assert "Interrupt" in record["duck"], record
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)

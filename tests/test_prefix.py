@@ -11,7 +11,6 @@ input.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -285,23 +284,13 @@ def test_equidepth_parity_at_sf01(spark):
     sf0.1 too — ties across range-partition boundaries are where
     two-phase CDFs go wrong, and sf0.01 alone may not produce them."""
     from etl_manager_spark.workloads import load_registry
+    from tools.parity_lib import check_parity
 
-    sf = "/root/testdata/sf0.1"
-    wl = load_registry()["equidepth_bins_orders_price"]
-    sdf = wl.fn(spark, sf)
-    srows = sorted(
-        tuple(r[c] for c in sorted(sdf.columns)) for r in sdf.collect()
+    name = "equidepth_bins_orders_price"
+    record = check_parity(
+        spark, name, load_registry()[name], "/root/testdata/sf0.1"
     )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{sf}/orders.parquet')"
-    )
-    res = con.execute(wl.oracle)
-    cols = [d[0] for d in res.description]
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    drows = sorted(tuple(row[i] for i in idx) for row in res.fetchall())
-    assert sorted(sdf.columns) == sorted(cols)
-    assert srows == drows
+    assert record["status"] == "parity", record
 
 
 def test_ordered_cumsum_construction_runs_only_the_checkpoint_jobs(
@@ -312,32 +301,25 @@ def test_ordered_cumsum_construction_runs_only_the_checkpoint_jobs(
     additionally paid a totals collect (an extra eager job wave and a
     driver barrier) per call; rfm chains three calls. The reference
     count is measured in-test so the assertion is robust to how many
-    jobs AQE uses per materialization. Job counts are taken as deltas of
-    the MAX job id (globally monotonic) — a len() delta goes negative in
-    a long shared-session suite run, where the status tracker's bounded
+    jobs AQE uses per materialization. Jobs are counted by
+    ``plans.counters.counted_jobs``, which stays right in a long
+    shared-session suite run, where the status tracker's bounded
     retained-jobs buffer evicts old entries between snapshots."""
-    tracker = spark.sparkContext.statusTracker()
+    from etl_manager_spark.plans.counters import counted_jobs
 
-    def max_job_id() -> int:
-        ids = tracker.getJobIdsForGroup(None)
-        return max(ids) if ids else -1
-
-    before = max_job_id()
-    (
-        frame.repartitionByRange(5, F.asc("k"), F.asc("id"))
-        .withColumn("_p", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    checkpoint_jobs = max_job_id() - before
-
-    before = max_job_id()
-    out = ordered_cumsum(
-        frame, [F.asc("k"), F.asc("id")], ["v"], rank_name="rnk",
-        n_partitions=5,
-    )
-    construction_jobs = max_job_id() - before
-    assert construction_jobs <= checkpoint_jobs, (
-        f"construction ran {construction_jobs} jobs vs {checkpoint_jobs} "
+    with counted_jobs(spark) as checkpoint:
+        (
+            frame.repartitionByRange(5, F.asc("k"), F.asc("id"))
+            .withColumn("_p", F.spark_partition_id())
+            .localCheckpoint(eager=True)
+        )
+    with counted_jobs(spark) as construction:
+        out = ordered_cumsum(
+            frame, [F.asc("k"), F.asc("id")], ["v"], rank_name="rnk",
+            n_partitions=5,
+        )
+    assert construction["jobs"] <= checkpoint["jobs"], (
+        f"construction ran {construction['jobs']} jobs vs {checkpoint['jobs']} "
         "for the checkpoint alone — an extra eager action (the old "
         "totals collect?) is back"
     )

@@ -176,30 +176,28 @@ def test_construction_runs_only_the_checkpoint_jobs(spark):
     materialization."""
     from pyspark.sql import functions as F2
 
-    tracker = spark.sparkContext.statusTracker()
+    from etl_manager_spark.plans.counters import counted_jobs
+
     df = spark.range(1000).selectExpr("id % 3 as g", "cast(id as double) v")
 
     # reference: the checkpoint alone (same shape the operator builds)
-    before = len(tracker.getJobIdsForGroup(None))
-    (
-        df.groupBy(F2.struct("g").alias("_qg"), F2.col("v").alias("_qv"))
-        .agg(F2.count(F2.lit(1)).alias("_qc"))
-        .repartitionByRange(8, "_qg", "_qv")
-        .withColumn("_qp", F2.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    checkpoint_jobs = len(tracker.getJobIdsForGroup(None)) - before
-
-    before = len(tracker.getJobIdsForGroup(None))
-    out = grouped_exact_percentiles(
-        df, ["g"], "v", {"med": 0.5, "q9": 0.9}, n_partitions=8
-    )
-    construction_jobs = len(tracker.getJobIdsForGroup(None)) - before
+    with counted_jobs(spark) as checkpoint:
+        (
+            df.groupBy(F2.struct("g").alias("_qg"), F2.col("v").alias("_qv"))
+            .agg(F2.count(F2.lit(1)).alias("_qc"))
+            .repartitionByRange(8, "_qg", "_qv")
+            .withColumn("_qp", F2.spark_partition_id())
+            .localCheckpoint(eager=True)
+        )
+    with counted_jobs(spark) as construction:
+        out = grouped_exact_percentiles(
+            df, ["g"], "v", {"med": 0.5, "q9": 0.9}, n_partitions=8
+        )
     # construction = base checkpoint + the tiny totals checkpoint (≤2
     # jobs, it reads the already-materialized base); anything beyond
     # means an extra eager action (the old driver collect) is back
-    assert construction_jobs <= checkpoint_jobs + 2, (
-        f"construction ran {construction_jobs} jobs vs {checkpoint_jobs} "
+    assert construction["jobs"] <= checkpoint["jobs"] + 2, (
+        f"construction ran {construction['jobs']} jobs vs {checkpoint['jobs']} "
         "for the base checkpoint alone (+2 allowed for the totals "
         "checkpoint) — an extra eager action is back"
     )

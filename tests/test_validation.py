@@ -104,6 +104,7 @@ def test_profile_approx_quantiles_n_groups_hint(spark):
     in-plan assert_true few-groups contract."""
     from pyspark.sql.utils import AnalysisException  # noqa: F401
 
+    from etl_manager_spark.plans.counters import counted_jobs
     from etl_manager_spark.validation import profile_approx_quantiles
 
     rows = [("a", 1.0), ("a", 2.0), ("b", 3.0), (None, 10.0)]
@@ -119,22 +120,14 @@ def test_profile_approx_quantiles_n_groups_hint(spark):
     }
     assert probed == hinted and len(probed) == 3
 
-    tracker = spark.sparkContext.statusTracker()
-
-    def max_job_id() -> int:
-        ids = tracker.getJobIdsForGroup(None)
-        return max(ids) if ids else -1
-
     # plan construction still pays the CDF machinery's checkpoint jobs,
     # but the hint must shave the probe's own job(s): construction with
     # the hint runs strictly fewer jobs than construction with the probe
-    before = max_job_id()
-    profile_approx_quantiles(df, "g", "v", n_groups_hint=3)
-    hinted_jobs = max_job_id() - before
-    before = max_job_id()
-    profile_approx_quantiles(df, "g", "v")
-    probed_jobs = max_job_id() - before
-    assert hinted_jobs < probed_jobs, (hinted_jobs, probed_jobs)
+    with counted_jobs(spark) as hinted:
+        profile_approx_quantiles(df, "g", "v", n_groups_hint=3)
+    with counted_jobs(spark) as probed:
+        profile_approx_quantiles(df, "g", "v")
+    assert hinted["jobs"] < probed["jobs"], (hinted, probed)
 
     # a hint above max_groups picks the builtin fallback (same values)
     big = spark.range(120).selectExpr("id as g", "cast(id as double) as v")

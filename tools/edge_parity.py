@@ -7,7 +7,7 @@ never emits — zero rows, NULL keys, duplicate PKs, dangling FKs, empty /
 unicode text, zero-norm embeddings, ordering ties everywhere (see
 tools/edge_data.py). For each oracle-bearing catalog query it runs the
 Spark side and the DuckDB oracle against the SAME edge dataset and applies
-the exact driver compare (tools/parity_lib.py). Outcomes per query:
+the exact driver compare (tools/parity_lib.check_parity). Outcomes per query:
 
 - ``parity``       — identical results. The strong pass.
 - ``both_error``   — both engines raised. Consistent behavior (usually an
@@ -41,7 +41,7 @@ import traceback
 REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
 sys.path.insert(0, REPO)
 
-from tools.parity_lib import compare_results  # noqa: E402
+from tools.parity_lib import check_parity  # noqa: E402
 
 # name -> reason. Only for divergences that are NOT bugs: engine-level
 # semantics differences surfaced by degenerate data, or queries whose
@@ -90,13 +90,9 @@ def run_sweep(
     names: list[str] | None = None,
     oracle_timeout: float | None = None,
 ) -> dict:
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = data_dir
-
-    import duckdb
     from pyspark.sql import SparkSession
 
     from etl_manager_spark.workloads import load_registry
-    from etl_manager_spark.workloads.tables import TABLE_NAMES
 
     spark = (
         SparkSession.builder.master(
@@ -110,13 +106,6 @@ def run_sweep(
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    duck = duckdb.connect()
-    for t in TABLE_NAMES:
-        duck.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{data_dir}/{t}.parquet')"
-        )
-
     registry = load_registry()
     targets = sorted(
         n for n, wl in registry.items() if wl.oracle_spec is not None
@@ -135,58 +124,11 @@ def run_sweep(
             results[name] = {"status": "skipped", "reason": skip[1]}
             counts["skipped"] += 1
             continue
-        wl = registry[name]
-        s_err = d_err = None
-        s_cols = s_rows = s_dtypes = None
-        d_cols = d_rows = d_types = None
-        try:
-            sdf = wl.fn(spark, data_dir)
-            s_cols, s_dtypes = sdf.columns, sdf.dtypes
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as exc:  # noqa: BLE001 - sweep must keep going
-            s_err = f"{type(exc).__name__}: {exc}"[:500]
-        try:
-            sql = wl.oracle
-            rel = duck.sql(sql)
-            d_types = [str(t) for t in rel.types]
-            timer = None
-            if oracle_timeout is not None:
-                # some oracles are deliberately brute-force (recursive
-                # transitive closures, all-pairs verifies) and can be
-                # quadratic on shapes the ENGINE handles fine — interrupt
-                # rather than stall the whole sweep on one oracle
-                import threading
-
-                timer = threading.Timer(oracle_timeout, duck.interrupt)
-                timer.start()
-            try:
-                res = duck.execute(sql)
-                d_cols = [d[0] for d in res.description]
-                d_rows = res.fetchall()
-            finally:
-                if timer is not None:
-                    timer.cancel()
-        except Exception as exc:  # noqa: BLE001
-            d_err = f"{type(exc).__name__}: {exc}"[:500]
-
-        if s_err and d_err:
-            status = "both_error"
-            detail = {"spark": s_err, "duck": d_err}
-        elif s_err:
-            status, detail = "spark_error", {"spark": s_err}
-        elif d_err:
-            status, detail = "duck_error", {"duck": d_err}
-        else:
-            problems = compare_results(
-                name, s_cols, s_rows, s_dtypes, d_cols, d_rows, d_types
-            )
-            if problems:
-                status, detail = "mismatch", {"problems": problems}
-            else:
-                status, detail = "parity", {}
-        counts[status] += 1
-        entry = {"status": status, **detail}
-        if name in EDGE_LEDGER and status in (
+        entry = check_parity(
+            spark, name, registry[name], data_dir, oracle_timeout
+        )
+        counts[entry["status"]] += 1
+        if name in EDGE_LEDGER and entry["status"] in (
             "mismatch", "spark_error", "duck_error"
         ):
             entry["adjudicated"] = EDGE_LEDGER[name]

@@ -15,6 +15,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+LINT_SF_DIR = os.environ.get("SPARK_GRAFT_LINT_SF_DIR", "/root/testdata/sf0.001")
+
 # row-at-a-time Python is the documented point of these two (bounded input)
 ROW_UDF_ALLOWED = {"udtf_event_runs_per_user", "udtf_token_explode_documents"}
 
@@ -315,14 +317,14 @@ def main() -> None:
 
     from etl_manager_spark.plans import lint_plan
     from etl_manager_spark.workloads import load_registry
+    from tools.order_nulls import unqualified_order_items
 
-    sf = os.environ.get("SPARK_GRAFT_LINT_SF_DIR", "/root/testdata/sf0.001")
     reg = load_registry()
     report: dict[str, list[str]] = {}
     errors: dict[str, str] = {}
     for name in sorted(reg):
         try:
-            codes = [w.code for w in lint_plan(reg[name].fn(spark, sf))]
+            codes = [w.code for w in lint_plan(reg[name].fn(spark, LINT_SF_DIR))]
         except Exception as exc:  # noqa: BLE001 - record and continue
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             continue
@@ -361,7 +363,7 @@ def main() -> None:
     # DuckDB have opposite placement defaults, the class that produced
     # eight real divergences in round 9 (PARITY_SWEEPS.md). Structural
     # gate so the class cannot re-enter with new oracles.
-    order_null_bad = scan_order_nulls(reg)
+    order_null_bad = unqualified_order_items(reg)
 
     out = {
         "queries_total": len(reg),
@@ -395,33 +397,12 @@ def main() -> None:
         sys.exit(1)
 
 
-def scan_order_nulls(reg) -> dict[str, list[str]]:
-    """Window ORDER BY items in oracle text lacking NULLS FIRST/LAST."""
-    from tools.order_nulls import find_unqualified
-
-    bad: dict[str, list[str]] = {}
-    for name in sorted(reg):
-        if reg[name].oracle:
-            items = find_unqualified(reg[name].oracle)
-            if items:
-                bad[name] = items
-    return bad
-
-
 def scan_oracle_types(reg) -> dict[str, list[str]]:
     """Plan (not run) every oracle in DuckDB against empty same-schema views
     and reject declared result types with no Spark twin."""
-    import duckdb
+    from tools.parity_lib import forbidden_token, oracle_db
 
-    from etl_manager_spark.workloads.tables import TABLE_NAMES
-    from tools.parity_lib import FORBIDDEN_TOKENS
-
-    sf = os.environ.get("SPARK_GRAFT_LINT_SF_DIR", "/root/testdata/sf0.001")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
+    con = oracle_db(LINT_SF_DIR)
     bad: dict[str, list[str]] = {}
     for name in sorted(reg):
         spec = reg[name].oracle_spec
@@ -434,7 +415,7 @@ def scan_oracle_types(reg) -> dict[str, list[str]]:
         hits = [
             f"{col}: {dtype}"
             for col, dtype in zip(rel.columns, rel.types)
-            if any(tok in str(dtype).upper() for tok in FORBIDDEN_TOKENS)
+            if forbidden_token(dtype)
         ]
         if hits:
             bad[name] = hits

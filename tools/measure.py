@@ -11,14 +11,9 @@ Each record holds:
   untimed pass, median of $SPARK_GRAFT_BENCH_RUNS runs, default 3, and
   the between-query hygiene), so close-in-time A/B pairs between two
   trees carry the same protocol as the full-catalog bench;
-* ``jobs``, ``stages``, ``tasks`` — counted around one more run made
-  after the timed ones (stores built, codegen warm): the jobs are the
-  ungrouped jobs started in that run, stages are summed per job, and
-  tasks are Spark's own per-job count (the tasks of the stages a job
-  still had to compute when it started) summed over the jobs;
-* ``barrier_jobs`` — those of the run's jobs that are eager barriers:
-  the checkpoint jobs of ``operators/materialize.py``, whose job
-  description starts with ``"materialize "``;
+* ``jobs``, ``stages``, ``tasks``, ``barrier_jobs`` — counted by
+  ``etl_manager_spark.plans.counters.counted_jobs`` around one more run
+  made after the timed ones (stores built, codegen warm);
 * ``parquet_scans`` (per table), ``existing_rdd_scans`` (reads of
   materialized frames), ``exchanges``, ``reused_exchanges`` — counted in
   that run's formatted physical plan. Streaming queries have no batch
@@ -55,6 +50,7 @@ sys.path.insert(0, REPO)
 
 from bench import build_session, run_queries, warm_batch, warm_streaming  # noqa: E402
 
+from etl_manager_spark.plans.counters import counted_jobs  # noqa: E402
 from etl_manager_spark.plans.inspect import explain_formatted  # noqa: E402
 from etl_manager_spark.workloads import load_registry  # noqa: E402
 
@@ -83,38 +79,6 @@ def _plan_counters(plan: str) -> dict:
     }
 
 
-def _counted_run(spark, entry, sf_dir):
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    before = max(tracker.getJobIdsForGroup(None), default=-1)
-    df = entry.fn(spark, sf_dir)
-    df.write.mode("overwrite").format("noop").save()
-    # the status store is fed by the listener bus: drain it so every job
-    # of this run is visible before counting
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    # Job records only: once a session has run spark.ui.retainedStages
-    # stages, the status store evicts skipped stage records first, so a
-    # per-stage task lookup fails or undercounts; job records of this run
-    # are the newest and stay.
-    jobs = [
-        jsc.statusStore().job(j)
-        for j in tracker.getJobIdsForGroup(None)
-        if j > before
-    ]
-    descriptions = [jd.description() for jd in jobs]
-    rec = {
-        "jobs": len(jobs),
-        "stages": sum(jd.stageIds().size() for jd in jobs),
-        "tasks": sum(jd.numTasks() for jd in jobs),
-        "barrier_jobs": sum(
-            d.isDefined() and d.get().startswith("materialize ")
-            for d in descriptions
-        ),
-    }
-    return rec, df
-
-
 def measure(spark, names, sf_dir, n_runs, plans_dir=None) -> dict:
     """One record per name (see the module docstring). Raises
     ``ValueError`` on an unknown name before touching ``spark``."""
@@ -129,7 +93,9 @@ def measure(spark, names, sf_dir, n_runs, plans_dir=None) -> dict:
             continue
         entry = registry[name]
         try:
-            rec, df = _counted_run(spark, entry, sf_dir)
+            with counted_jobs(spark) as rec:
+                df = entry.fn(spark, sf_dir)
+                df.write.mode("overwrite").format("noop").save()
             if entry.category == "streaming":
                 rec["skipped"] = "streaming"
             else:

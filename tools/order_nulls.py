@@ -175,15 +175,15 @@ def qualify_sql(sql: str, skip_braced: bool = False) -> str:
     return sql
 
 
-def _audit_registry() -> dict[str, list[str]]:
-    from etl_manager_spark.workloads import load_registry
-
+def unqualified_order_items(reg) -> dict[str, list[str]]:
+    """Registry name → the window ORDER BY items of its oracle text that
+    lack NULLS FIRST/LAST (queries with none are left out)."""
     bad = {}
-    for name, ent in load_registry().items():
-        if ent.oracle:
-            items = find_unqualified(ent.oracle)
-            if items:
-                bad[name] = items
+    for name in sorted(reg):
+        sql = reg[name].oracle
+        items = find_unqualified(sql) if sql else []
+        if items:
+            bad[name] = items
     return bad
 
 
@@ -195,7 +195,9 @@ def main() -> None:
     check = "--check" in sys.argv
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    bad = _audit_registry()
+    from etl_manager_spark.workloads import load_registry
+
+    bad = unqualified_order_items(load_registry())
     total = sum(len(v) for v in bad.values())
     print(f"audit: {len(bad)} oracles / {total} unqualified order items")
     if check:
