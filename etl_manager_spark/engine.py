@@ -16,6 +16,7 @@ Typical use::
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -23,6 +24,9 @@ if TYPE_CHECKING:  # pragma: no cover
 
     from etl_manager_spark.meta.database import DatabaseMeta
     from etl_manager_spark.validation import ConstraintReport
+
+# bounds py4j connections and JVM threads; Spark's scheduler queues the tasks
+VALIDATE_THREADS = 8
 
 
 class Engine:
@@ -67,16 +71,51 @@ class Engine:
             )
 
     def validate(self, db: "DatabaseMeta") -> dict[str, "ConstraintReport"]:
-        """Constraint report per table (declared → enforced on demand)."""
+        """Constraint report per table (declared → enforced on demand), in
+        ``db.tables`` order.
+
+        Tables are checked concurrently, on at most ``VALIDATE_THREADS``
+        threads. Each table's check is a few small Spark jobs whose wall time
+        is mostly driver-side latency (py4j, Catalyst, stage boundaries,
+        scheduling), not task time, so running the tables side by side
+        overlaps that latency; the jobs and plans are the same as one table
+        at a time. Each table's check is wrapped on its own by
+        ``inheritable_thread_target``, so its jobs carry the caller's local
+        properties (job group, description, scheduler pool) in a copy of
+        their own: one shared copy would receive every thread's SQL
+        execution id. Every check has finished before this returns or
+        raises; when tables fail, the error of the first failing table in
+        ``db.tables`` order is raised unchanged."""
+        from pyspark.util import inheritable_thread_target
+
         from etl_manager_spark.validation import validate
 
-        return {t.name: validate(t.read(self.spark), t) for t in db.tables}
+        def check(t):
+            return validate(t.read(self.spark), t)
+
+        tables = list(db.tables)
+        if not tables:
+            return {}
+        with ThreadPoolExecutor(min(len(tables), VALIDATE_THREADS)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(check), t)
+                for t in tables
+            ]
+        return {t.name: f.result() for t, f in zip(tables, futures)}
 
     def run_job(self, job_folder: str, **kwargs):
-        """Execute a folder-convention job with this engine's session."""
+        """Execute a folder-convention job with this engine's session.
+
+        The job's scratch dir (``job_temp_path`` inside job.py) lives only
+        for the run: it is removed when the run returns or raises. Use
+        :class:`~etl_manager_spark.jobs.SparkJob` directly to keep it."""
         from etl_manager_spark.jobs import SparkJob
 
         run_kwargs = {}
         if "timeout_minutes" in kwargs:
             run_kwargs["timeout_minutes"] = kwargs.pop("timeout_minutes")
-        return SparkJob(job_folder, **kwargs).run(self.spark, **run_kwargs)
+        job = SparkJob(job_folder, **kwargs)
+        try:
+            return job.run(self.spark, **run_kwargs)
+        finally:
+            job.cleanup()

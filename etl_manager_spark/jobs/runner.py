@@ -367,7 +367,14 @@ class SparkJob:
             if timeout is None:
                 _target()
             else:
-                thread = threading.Thread(target=_target, daemon=True)
+                from pyspark.util import inheritable_thread_target
+
+                # the worker runs with a copy of the caller's local
+                # properties (scheduler pool, custom keys); the run's own
+                # setJobGroup still overrides the group
+                thread = threading.Thread(
+                    target=inheritable_thread_target(spark)(_target), daemon=True
+                )
                 thread.start()
                 thread.join(timeout * 60)
                 if thread.is_alive():

@@ -1619,8 +1619,11 @@ def run_job_etl_output(spark, sf_dir):
         folder,
         job_arguments={"--sf_dir": sf_dir, "--output_path": out_path},
     )
-    job.run(spark)
-    assert job.job_run_state == "SUCCEEDED"
+    try:
+        job.run(spark)
+        assert job.job_run_state == "SUCCEEDED"
+    finally:
+        job.cleanup()
     return spark.read.parquet(out_path)
 
 

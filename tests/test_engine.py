@@ -2,9 +2,12 @@
 warehouse."""
 
 import pathlib
+import threading
 
+import pytest
 from pyspark.sql import Row
 
+import etl_manager_spark
 from etl_manager_spark import DatabaseMeta, TableMeta
 from etl_manager_spark.engine import Engine
 
@@ -214,3 +217,138 @@ def test_database_from_catalog_skips_temp_views_and_reads_provider(spark, tmp_pa
     finally:
         spark.catalog.dropTempView("some_random_tempview")
         spark.sql("DROP DATABASE IF EXISTS introdb CASCADE")
+
+
+@pytest.fixture(scope="module")
+def three_table_db(spark, tmp_path_factory):
+    """A partitioned table with a primary key, a table without a key and a
+    csv table, each with a seeded violation; written once per module."""
+    db = DatabaseMeta(
+        name="wh_validate", bucket=str(tmp_path_factory.mktemp("wh")), base_folder="db"
+    )
+    tables = [
+        TableMeta(
+            name="teams",
+            location="teams",
+            columns=[
+                {"name": "team_id", "type": "int", "nullable": False},
+                {"name": "grade", "type": "int", "enum": [1, 2]},
+                {"name": "snapshot_year", "type": "int"},
+            ],
+            partitions=["snapshot_year"],
+            primary_key=["team_id"],
+        ),
+        TableMeta(
+            name="events",
+            location="events",
+            columns=[
+                {"name": "kind", "type": "character", "pattern": "[a-z]+"},
+                {"name": "n", "type": "int", "nullable": False},
+            ],
+        ),
+        TableMeta(
+            name="codes",
+            location="codes",
+            data_format="csv",
+            columns=[
+                {"name": "code", "type": "character", "enum": ["a", "b"]},
+                {"name": "v", "type": "int"},
+            ],
+        ),
+    ]
+    rows = [
+        ([(1, 1, 2023), (1, 3, 2024), (2, 2, 2024)], "team_id int, grade int, snapshot_year int"),
+        ([("ok", 1), ("BAD", None)], "kind string, n int"),
+        ([("a", 1), ("z", 2), (None, 3)], "code string, v int"),
+    ]
+    for t, (data, schema) in zip(tables, rows):
+        db.add_table(t)
+        t.write(spark.createDataFrame(data, schema), mode="overwrite")
+    return db
+
+
+def test_validate_matches_per_table_reports(spark, three_table_db):
+    from etl_manager_spark.validation import validate
+
+    db = three_table_db
+    reports = Engine(spark).validate(db)
+    assert list(reports) == db.table_names
+    assert reports == {t.name: validate(t.read(spark), t) for t in db.tables}
+    assert reports["teams"].violations == {
+        "team_id.nullable": 0, "grade.enum": 1, "primary_key": 1,
+    }
+    assert reports["events"].violations == {"kind.pattern": 1, "n.nullable": 1}
+    assert reports["codes"].violations == {"code.enum": 1}
+
+
+def test_validate_jobs_inherit_the_callers_local_properties(spark, three_table_db):
+    """Every job the concurrent checks launch joins the caller's job group
+    and carries its scheduler pool; plain worker threads would start with
+    empty local properties, and their jobs would be ungrouped."""
+    from etl_manager_spark.plans.counters import counted_jobs
+
+    db = three_table_db
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    group = "validate-inherits-props"
+    sc.setJobGroup(group, "validate under a caller group")
+    sc.setLocalProperty("spark.scheduler.pool", "etl")
+    try:
+        with counted_jobs(spark) as ungrouped:
+            Engine(spark).validate(db)
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert ungrouped["jobs"] == 0
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) >= len(db.tables)
+    store = jsc.statusStore()
+    pools = set()
+    for j in jobs:
+        stage_ids = store.job(j).stageIds()
+        for i in range(stage_ids.size()):
+            stage = store.lastStageAttempt(stage_ids.apply(i))
+            if stage.status().toString() == "COMPLETE":
+                pools.add(stage.schedulingPool())
+    assert pools == {"etl"}
+
+
+def test_validate_raises_the_first_failing_table_and_joins_its_threads(
+    spark, three_table_db
+):
+    from pyspark.errors import AnalysisException
+
+    db = three_table_db
+    gone = ("gone_a", "gone_b")
+    for name in gone:
+        db.add_table(
+            TableMeta(name=name, location=name, columns=[{"name": "k", "type": "int"}])
+        )
+    before = threading.active_count()
+    try:
+        with pytest.raises(AnalysisException) as err:
+            Engine(spark).validate(db)
+    finally:
+        for name in gone:
+            db.remove_table(name)
+    assert "gone_a" in str(err.value) and "gone_b" not in str(err.value)
+    assert threading.active_count() == before
+
+
+def test_only_engine_and_runner_start_threads():
+    """A thread that runs Spark work must inherit the caller's local
+    properties, so threads are started only in engine.py and
+    jobs/runner.py, and both wrap their targets in
+    ``inheritable_thread_target``."""
+    pkg = pathlib.Path(etl_manager_spark.__file__).parent
+    owners = {pkg / "engine.py", pkg / "jobs" / "runner.py"}
+    starters = ("Thread(", "ThreadPoolExecutor(")
+    offenders = [
+        str(path.relative_to(pkg))
+        for path in sorted(pkg.rglob("*.py"))
+        if path not in owners and any(s in path.read_text() for s in starters)
+    ]
+    assert offenders == []
+    for path in owners:
+        assert "inheritable_thread_target(" in path.read_text(), path

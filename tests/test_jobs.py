@@ -2,6 +2,7 @@
 argument validation, cost timeout, typed failures — etl.py:45-743)."""
 
 import os
+import tempfile
 import textwrap
 
 import pytest
@@ -13,6 +14,16 @@ from etl_manager_spark.jobs import (
     cost_timeout_minutes,
 )
 from etl_manager_spark.jobs.runner import JobError
+
+
+@pytest.fixture(autouse=True)
+def job_tempdir(tmp_path, monkeypatch):
+    """Each test's temp dir, where the runs' scratch dirs land: most tests
+    here never call cleanup(), and must not leave them in the system's."""
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    return scratch
 
 
 def make_job(tmp_path, body, name="myjob", with_resources=True):
@@ -465,3 +476,39 @@ def test_stop_during_query_planning_is_not_lost(tmp_path, spark):
     finally:
         stopper.cancel()
     assert j.job_run_state == "STOPPED"
+
+
+def test_timed_run_keeps_the_callers_local_properties(tmp_path, spark):
+    """A timed run executes job.py in a worker thread, which must start
+    from the caller's local properties like an inline run does; the run's
+    own job group still applies inside it."""
+    sc = spark.sparkContext
+    j = SparkJob(make_job(
+        tmp_path,
+        """
+        sc = spark.sparkContext
+        result = [sc.getLocalProperty(k) for k in ("x", "spark.scheduler.pool")]
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        """,
+        with_resources=False,
+    ))
+    sc.setLocalProperty("x", "caller")
+    sc.setLocalProperty("spark.scheduler.pool", "etl")
+    try:
+        inline = j.run(spark)
+        timed = j.run(spark, timeout_minutes=1)
+    finally:
+        sc.setLocalProperty("x", None)
+        sc.setLocalProperty("spark.scheduler.pool", None)
+    assert inline["result"] == timed["result"] == ["caller", "etl"]
+    assert timed["group"].startswith("sparkjob-myjob-")
+
+
+def test_engine_run_job_removes_its_scratch_dir(tmp_path, spark, job_tempdir):
+    from etl_manager_spark.engine import Engine
+
+    job = make_job(tmp_path, "result = job_temp_path", with_resources=False)
+    engine = Engine(spark)
+    out = [engine.run_job(job)["result"] for _ in range(2)]
+    assert all(p.startswith(str(job_tempdir)) for p in out)
+    assert list(job_tempdir.iterdir()) == []
